@@ -176,9 +176,20 @@ object GraftApp {
     * Delta conversion is gated exactly like the reference (processor.go:
     * 106-110): only CUMULATIVE SUM/HISTOGRAM rows enter the stateful path;
     * gauges, summaries, and already-delta rows pass through untouched. Both
-    * branches land in the same metrics_raw schema. */
+    * branches land in the same metrics_raw schema.
+    *
+    * A run-to-completion trigger (`AvailableNow`, `Once`) with delta
+    * conversion and `stateTtlMs > 0` is refused: the processing-time state
+    * timeout asks for another batch after every batch, so the query would
+    * never terminate. */
   def start(spark: SparkSession, cfg: GraftConfig,
       trigger: Trigger = null): StreamingQuery = {
+    @scala.annotation.nowarn("cat=deprecation") // Trigger.Once is still accepted
+    val runsToCompletion = trigger == Trigger.AvailableNow() || trigger == Trigger.Once()
+    require(!(runsToCompletion && cfg.convertToDelta && cfg.stateTtlMs > 0),
+      s"trigger $trigger never terminates with processor.state_ttl_ms = " +
+        s"${cfg.stateTtlMs}: set stateTtlMs (processor.state_ttl_ms) to 0 " +
+        "or use a ProcessingTime trigger")
     val nowCol = cfg.nowMs.map(n => lit(n))
       .getOrElse(unix_millis(current_timestamp()))
     val exports = OtlpSource.fileStream(spark, cfg.sourceDir,

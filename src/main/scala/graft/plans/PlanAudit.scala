@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
@@ -54,23 +55,24 @@ object PlanAudit {
     * the exact forms are the oracle-twin instrument only. */
   def exactPercentileAggs(plan: SparkPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.PercentileBase
-    def aggFns(p: SparkPlan) = p match {
+    aggregateFunctions(plan).collect { case pct: PercentileBase => pct.toString }
+  }
+
+  /** Every aggregate function of every aggregate node in the executed tree
+    * (partial and final halves both appear). Unlike [[scannedPaths]] this
+    * needs no execution first: the pre-execution adaptive tree already holds
+    * every aggregate node. */
+  def aggregateFunctions(plan: SparkPlan): Seq[AggregateFunction] = {
+    val self = plan match {
+      case a: AdaptiveSparkPlanExec => aggregateFunctions(a.executedPlan)
+      case q: QueryStageExec => aggregateFunctions(q.plan)
+      case r: ReusedExchangeExec => aggregateFunctions(r.child)
       case h: HashAggregateExec => h.aggregateExpressions.map(_.aggregateFunction)
       case o: ObjectHashAggregateExec => o.aggregateExpressions.map(_.aggregateFunction)
       case s: SortAggregateExec => s.aggregateExpressions.map(_.aggregateFunction)
       case _ => Seq.empty
     }
-    def walk(p: SparkPlan): Seq[String] = {
-      val self = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case r: ReusedExchangeExec => walk(r.child)
-        case other =>
-          aggFns(other).collect { case pct: PercentileBase => pct.toString }
-      }
-      self ++ p.children.flatMap(walk)
-    }
-    walk(plan)
+    self ++ plan.children.flatMap(aggregateFunctions)
   }
 
   /** Every shuffle exchange in the executed tree — the audit behind a

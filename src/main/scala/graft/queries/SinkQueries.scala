@@ -1,9 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.metrics.{EventsMetrics, Rollup}
+import graft.plans.PlanAudit
 import graft.query.Promread
 import graft.sink.{MetricsSink, RollupMaintenance}
 
@@ -51,6 +53,19 @@ object SinkQueries {
   private val RtStart = 1705708800000L
   private val RtEnd = RtStart + 20 * 3600L * 1000L
 
+  /** The routed query's executed plan, required to scan the stored `tier`
+    * and never the raw one. Checked on the file scans' root paths, not the
+    * plan text, which `spark.sql.maxMetadataStringLength` cuts short once
+    * the store path is long. */
+  private def requireRouted(routed: DataFrame, tier: String, query: String): SparkPlan = {
+    val plan = routed.queryExecution.executedPlan
+    val dirs = PlanAudit.scannedPaths(plan).flatMap(_.split('/'))
+    require(dirs.contains(tier),
+      s"MV routing did not fire — $query would verify an unrouted plan")
+    require(!dirs.contains("metrics_raw"), "raw tier still scanned after MV routing")
+    plan
+  }
+
   /** Shared body of the routed histogram dashboard queries: write raw,
     * cascade into scratch tiers (concat or bound-merged storage per
     * `mergeTierBuckets`), then run the histogram_quantile aggregate over RAW
@@ -91,12 +106,8 @@ object SinkQueries {
           round(histogram_quantile(merged, lit(50.0)), 6).as("p50"),
           round(histogram_quantile(merged, lit(95.0)), 6).as("p95"))
         .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
-      val plan = routed.queryExecution.executedPlan.toString
-      require(plan.contains("metrics_5m"),
-        "MV routing did not fire — the routed hist query would verify an unrouted plan")
-      require(!plan.contains("metrics_raw"),
-        "raw tier still scanned after MV routing")
-      require(plan.contains("merge_buckets_agg"),
+      val plan = requireRouted(routed, "metrics_5m", "the routed hist query")
+      require(PlanAudit.aggregateFunctions(plan).exists(_.prettyName == "merge_buckets_agg"),
         "bucket merge missing from the routed plan")
       val rows = graft.BenchPhases.timed("read")(routed.collect())
       s.createDataFrame(java.util.Arrays.asList(rows: _*), routed.schema)
@@ -182,11 +193,7 @@ object SinkQueries {
             OracleDefs.stableAvg4(col("avg_raw")).as("value_avg"),
             col("samples_count"))
           .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
-        val plan = routed.queryExecution.executedPlan.toString
-        require(plan.contains("metrics_1m"),
-          "MV routing did not fire — q_p8_route_mv would verify an unrouted plan")
-        require(!plan.contains("metrics_raw"),
-          "raw tier still scanned after MV routing")
+        requireRouted(routed, "metrics_1m", "q_p8_route_mv")
         // the routed read is the measured phase; the write+cascade above is
         // setup (BenchPhases folds this out of the builder time for BENCH)
         val rows = graft.BenchPhases.timed("read")(routed.collect())

@@ -9,7 +9,14 @@ import io.netty.channel.nio.NioIoHandler
 import io.netty.channel.socket.SocketChannel
 import io.netty.channel.socket.nio.NioServerSocketChannel
 import io.netty.handler.codec.http2._
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+
+import graft.streaming.OtlpSource
 
 /** S1 transport — the reference's gRPC OTLP receiver
   * (internal/receiver/otlp.go:42-68: a grpc-go server registering
@@ -30,9 +37,13 @@ import org.apache.spark.sql.SparkSession
   * without processing; a decode failure is INVALID_ARGUMENT; a processing
   * failure is INTERNAL; success is an empty ExportMetricsServiceResponse
   * with grpc-status 0. Ingest hand-off is the same landing-zone protocol as
-  * [[RemoteReadServer]]'s `/ingest`: the batch lands atomically as a parquet
-  * file of export rows in the watched source dir and the app's file stream
-  * picks it up — the receiver is transport, the pipeline stays the pipeline.
+  * [[RemoteReadServer]]'s `/ingest` ([[Landing]]): the batch lands
+  * atomically as a parquet file of export rows in the watched source dir and
+  * the app's file stream picks it up — the receiver is transport, the
+  * pipeline stays the pipeline. The file is written by Spark's own parquet
+  * writer (same format, codec and export schema as a DataFrame write),
+  * driven directly on the worker thread: an Export runs no Spark job, so its
+  * ack never queues behind the micro-batch for the session's task slots.
   *
   * Hardening the reference has (and one it lacks): the 100 MiB message cap
   * (otlp.go:49-50) is enforced WHILE streaming — a stream that exceeds it is
@@ -49,12 +60,20 @@ class GrpcOtlpReceiver(spark: SparkSession, sourceDir: String,
   private var pool: java.util.concurrent.ExecutorService = _
   private val uploads = new AtomicLong(0)
 
+  // Spark's parquet writer, prepared once (prepareWrite fills the job's
+  // conf with the session's parquet settings); each landing opens one writer
+  private val writeJob = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+  private val writerFactory = new ParquetFileFormat()
+    .prepareWrite(spark, writeJob, Map.empty, OtlpSource.exportSchema)
+  private val toCatalyst =
+    CatalystTypeConverters.createToCatalystConverter(OtlpSource.exportSchema)
+
   def start(port: Int = 0): Int = synchronized {
     group = new MultiThreadIoEventLoopGroup(2, NioIoHandler.newFactory())
-    // Spark jobs must never run on the event loop: a parquet write blocks
-    // for Spark-job time, and the loop also carries every other stream's
-    // frames (the reference gets this per-call goroutine isolation from
-    // grpc-go for free)
+    // decode and landing must never run on the event loop: the parquet
+    // write blocks on disk I/O, and the loop also carries every other
+    // stream's frames (the reference gets this per-call goroutine isolation
+    // from grpc-go for free)
     pool = java.util.concurrent.Executors.newCachedThreadPool()
     val b = new ServerBootstrap()
       .group(group)
@@ -271,7 +290,7 @@ class GrpcOtlpReceiver(spark: SparkSession, sourceDir: String,
   }
 
   /** The unary Export call body → (grpc-status, message). Runs off the event
-    * loop; every Spark interaction lives here. */
+    * loop, on a worker thread that decodes and lands the batch itself. */
   private def process(body: Array[Byte], gzip: Boolean): (Int, String) = {
     val frames = parseGrpcFrames(body, gzip) match {
       case Right(f) => f
@@ -296,27 +315,19 @@ class GrpcOtlpReceiver(spark: SparkSession, sourceDir: String,
     }
   }
 
-  /** Same atomic landing protocol as RemoteReadServer.handleIngest: write the
-    * batch as one parquet file, dot-prefixed while in flight (the stream
-    * source's listing skips dot files), revealed by same-dir ATOMIC_MOVE. */
+  /** Write the batch as one parquet file straight into the landing temp
+    * ([[Landing.reveal]]): rows convert to Catalyst's internal form and go
+    * through a writer from the prepared factory — no DataFrame, no job. */
   private def land(rows: Seq[OtlpProto.ResourceRow]): Unit = {
-    val n = uploads.incrementAndGet()
-    val dir = new java.io.File(sourceDir)
-    dir.mkdirs()
-    val scratch = java.nio.file.Files.createTempDirectory("otlp_grpc")
-    try {
-      OtlpProto.toDataFrame(spark, rows)
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = scratch.toFile.listFiles
-        .filter(_.getName.endsWith(".parquet")).head
-      val tmp = java.io.File.createTempFile(s".grpc_${n}_", ".tmp", dir)
-      java.nio.file.Files.copy(part.toPath, tmp.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val dst = new java.io.File(dir, s"grpc_${System.nanoTime()}_$n.parquet")
-      java.nio.file.Files.move(tmp.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } finally RemoteReadServer.deleteRecursively(scratch.toFile)
+    Landing.reveal(new java.io.File(sourceDir), "grpc", uploads.incrementAndGet()) { tmp =>
+      // a conf copy per writer: writers on concurrent Exports share nothing
+      val ctx = new TaskAttemptContextImpl(
+        new JobConf(writeJob.getConfiguration), new TaskAttemptID())
+      val out = writerFactory.newInstance(tmp.toURI.toString, OtlpSource.exportSchema, ctx)
+      try OtlpProto.toRows(rows).foreach(r => out.write(toCatalyst(r).asInstanceOf[InternalRow]))
+      finally out.close()
+    }
+    ()
   }
 
   /** gRPC message framing: 1-byte compressed flag + 4-byte big-endian length

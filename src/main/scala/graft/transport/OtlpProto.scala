@@ -335,15 +335,16 @@ object OtlpProto {
     * .exportSchema]] — the exact frame the file-stream source reads and
     * [[graft.ingest.OtlpJson.decode]] produces, so everything downstream
     * (flatten, convert, validate, sink) is shared, not re-implemented. */
-  def toDataFrame(spark: SparkSession, rows: Seq[ResourceRow]): DataFrame = {
-    val data = rows.map { rr =>
-      Row(rr.resourceAttrs, rr.datapoints.map(dpRow))
-    }
+  def toDataFrame(spark: SparkSession, rows: Seq[ResourceRow]): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(data).asJava),
+        .SeqHasAsJava(toRows(rows)).asJava),
       graft.streaming.OtlpSource.exportSchema)
-  }
+
+  /** The same rows as external [[Row]]s of the export frame, one per
+    * resource — what [[GrpcOtlpReceiver]] converts and writes itself. */
+  def toRows(rows: Seq[ResourceRow]): Seq[Row] =
+    rows.map(rr => Row(rr.resourceAttrs, rr.datapoints.map(dpRow)))
 
   private def dpRow(d: Datapoint): Row = Row(
     d.metric, d.kind, d.tsMs, d.temporalityCode, d.isMonotonic,

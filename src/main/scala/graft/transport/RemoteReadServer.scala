@@ -26,12 +26,13 @@ import graft.sink.MetricsSink
   *     parquet file of export-shaped rows ([[graft.streaming.OtlpSource
   *     .exportSchema]]), or — with a JSON content type — a real collector's
   *     OTLP/HTTP+JSON `ExportMetricsServiceRequest`, decoded through
-  *     [[graft.ingest.OtlpJson]] first. Either way the batch lands
-  *     atomically in the watched source dir and the app's file stream picks
-  *     it up as a micro-batch. gRPC itself stays out of scope (no grpc
-  *     runtime ships here, and SURVEY §2.1 S1 scopes S1 to "transport, not
-  *     query semantics") — these are the transport stand-ins with the same
-  *     at-least-once hand-off.
+  *     [[graft.ingest.OtlpJson]] first. A parquet body lands as sent, with
+  *     no Spark work; a JSON body still decodes through one Spark job per
+  *     request (the decoded frame is written with `coalesce(1)` and its one
+  *     part file landed). Either way the batch lands atomically in the
+  *     watched source dir ([[Landing]]) and the app's file stream picks it
+  *     up as a micro-batch. Native gRPC OTLP is [[GrpcOtlpReceiver]]; both
+  *     share the same at-least-once hand-off.
   *
   * Serving model: the response materializes on the driver (the reference
   * handler does the same — it builds the full ReadResponse in memory,
@@ -122,15 +123,10 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
           else f(readBody(ex.getRequestBody),
             Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse(""))
         } catch {
-          case e: RemoteReadServer.BodyTooLarge =>
-            (413, e.getMessage.getBytes("UTF-8"), Map.empty[String, String])
-          case e: RemoteReadServer.QueryTimeout =>
-            // the reference fails long reads server-side via ClickHouse's
-            // max_execution_time=60 (writer.go:50-52); 503 is the HTTP arm
-            (503, e.getMessage.getBytes("UTF-8"), Map.empty[String, String])
           case e: Exception =>
-            (400, s"bad request: ${e.getMessage}".getBytes("UTF-8"),
-              Map.empty[String, String])
+            val status = RemoteReadServer.errorStatus(e)
+            val msg = if (status == 400) s"bad request: ${e.getMessage}" else e.getMessage
+            (status, msg.getBytes("UTF-8"), Map.empty[String, String])
         }
         headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
         ex.sendResponseHeaders(status, body.length.toLong)
@@ -159,8 +155,6 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
 
   private def handleIngest(body: Array[Byte], contentType: String): (Int, Array[Byte], Map[String, String]) = {
     val n = uploads.incrementAndGet()
-    val dir = new java.io.File(sourceDir)
-    dir.mkdirs()
     // parquet body: the batch is already export-shaped. JSON body: a real
     // collector's OTLP/HTTP+JSON export — decode it to the export frame
     // first, then land the parquet the file stream expects.
@@ -177,17 +171,9 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
           java.nio.file.Files.readAllBytes(part.toPath)
         } finally RemoteReadServer.deleteRecursively(out.toFile)
       } else body
-    // land atomically: a half-written file must never be visible to the
-    // file-stream source. The source's listing filters only dot/underscore-
-    // prefixed names, so the in-flight temp file MUST be dot-prefixed — a
-    // visible temp picked up mid-write (then renamed away) would poison the
-    // stream's offset log. ATOMIC_MOVE within the same directory then
-    // reveals the completed file in one step.
-    val tmp = java.io.File.createTempFile(s".upload_${n}_", ".tmp", dir)
-    java.nio.file.Files.write(tmp.toPath, parquetBytes)
-    val dst = new java.io.File(dir, s"upload_${System.nanoTime()}_$n.parquet")
-    java.nio.file.Files.move(tmp.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val dst = Landing.reveal(new java.io.File(sourceDir), "upload", n) { tmp =>
+      java.nio.file.Files.write(tmp.toPath, parquetBytes)
+    }
     (200, dst.getName.getBytes("UTF-8"), Map.empty)
   }
 
@@ -195,8 +181,17 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
     * the matcher predicates, shape, and regroup rows into TimeSeries. The
     * rollup tiers expose `value_last` as the sample value and `bucket_ms` as
     * the timestamp — the stored-tier read battery's contract
-    * (handler.go:179-205 sample arms; 304-321 routing). */
-  def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] = {
+    * (handler.go:179-205 sample arms; 304-321 routing).
+    *
+    * A read racing a compaction or cascade swap can plan over a file or tier
+    * directory that is gone by the time it is scanned; it is retried once
+    * from a fresh listing, and a second such failure surfaces as-is (503,
+    * [[RemoteReadServer.errorStatus]]) — as does a read before the tier's
+    * first write. */
+  def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] =
+    RemoteReadServer.retryStorageRace(readOnce(q, limit))
+
+  private def readOnce(q: PromProto.Query, limit: Int): Seq[PromProto.TimeSeries] = {
     import Promread._
     // per-request clock, like the reference handler: a frozen launch-time
     // now would age every routing decision on a long-running server
@@ -323,6 +318,40 @@ object RemoteReadServer {
   private[transport] final class QueryTimeout(ms: Long)
     extends RuntimeException(s"query exceeded the ${ms}ms execution budget")
 
+  /** HTTP status for a failed request: 413 over the body cap; 503 for the
+    * server-side transient arms — the execution budget (the reference fails
+    * long reads via ClickHouse's max_execution_time=60, writer.go:50-52) and
+    * storage that changed under the read; anything else is the request's
+    * fault, 400. */
+  private[transport] def errorStatus(e: Exception): Int = e match {
+    case _: BodyTooLarge => 413
+    case _: QueryTimeout => 503
+    case _ if isStorageRace(e) => 503
+    case _ => 400
+  }
+
+  /** Storage that changed under the read, or is not written yet, anywhere
+    * in the cause chain: FAILED_READ_FILE.FILE_NOT_EXIST from a scan whose
+    * file a compaction deleted; PATH_NOT_FOUND from a listing whose
+    * directory a swap moved, or a tier before its first write;
+    * UNABLE_TO_INFER_SCHEMA from a tier directory whose first write has not
+    * committed a file. Matched on error conditions and exception types,
+    * never on message text, which can echo the request's own matchers. */
+  private[transport] def isStorageRace(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+      case _: java.io.FileNotFoundException => true
+      case t: org.apache.spark.SparkThrowable => StorageRaceConditions.contains(t.getCondition)
+      case _ => false
+    }
+
+  private val StorageRaceConditions =
+    Set("FAILED_READ_FILE.FILE_NOT_EXIST", "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+  /** Run `read`; on a storage race run it once more, from scratch. */
+  private[transport] def retryStorageRace[T](read: => T): T =
+    try read
+    catch { case e: Exception if isStorageRace(e) => read }
+
   /** Shared deadline timer for [[RemoteReadServer]] instances — one daemon
     * thread; the scheduled task is a cheap cancelJobGroup call. */
   private[transport] lazy val watchdog:
@@ -333,7 +362,7 @@ object RemoteReadServer {
       t
     })
 
-  private[transport] def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete()
   }

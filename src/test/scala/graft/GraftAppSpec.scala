@@ -45,9 +45,10 @@ class GraftAppSpec extends SparkSpec {
     ()
   }
 
-  // stateTtlMs = 0: processing-time timeouts + AvailableNow would keep
-  // scheduling timeout-evaluation batches and never drain; the TTL is for
-  // the interval-triggered daemon (see StreamingTemporality.convertDelta).
+  // stateTtlMs = 0: these runs use AvailableNow, which GraftApp.start
+  // refuses with a state TTL (its processing-time timeouts would schedule a
+  // timeout-evaluation batch after every batch and never drain); the TTL is
+  // for the interval-triggered daemon (see StreamingTemporality.convertDelta).
   // publishRouting off by default here: the session is shared across suites,
   // and these fixtures' scratch storeDirs must not outlive their test as
   // session-wide routing confs (the dedicated routed-dashboard test below
@@ -84,6 +85,20 @@ class GraftAppSpec extends SparkSpec {
     assert(sinkRows(cfg).toSeq === Seq(
       ("m1", NowMs - 3000, 100.0), ("m1", NowMs - 2000, 50.0),
       ("m1", NowMs - 1000, 50.0)))
+  }
+
+  test("a run-to-completion trigger with a state TTL fails at start, not never") {
+    val base = Files.createTempDirectory("graft_app").toString
+    val cfg = cfgFor(base).copy(stateTtlMs = 60000L)
+    new java.io.File(cfg.sourceDir).mkdirs()
+    @annotation.nowarn("cat=deprecation")
+    val triggers = Seq(Trigger.AvailableNow(), Trigger.Once())
+    triggers.foreach { t =>
+      val e = intercept[IllegalArgumentException](GraftApp.start(spark, cfg, t))
+      assert(e.getMessage.contains("state_ttl_ms") && e.getMessage.contains(t.toString))
+    }
+    // without delta conversion there is no state to time out: it runs
+    runOnce(cfg.copy(convertToDelta = false))
   }
 
   test("checkpointed restart: new file continues per-series state (ST6)") {

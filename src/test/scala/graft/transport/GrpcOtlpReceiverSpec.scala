@@ -95,6 +95,27 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
     Option(new java.io.File(dir).listFiles).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.getName.endsWith(".parquet"))
 
+  /** The landing leaves nothing but revealed files behind: no dot-prefixed
+    * temp and no Hadoop `.crc` sidecar. */
+  private def assertOnlyLanded(dir: String, n: Int): Unit = {
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.size === n, names)
+    assert(names.forall(f => !f.startsWith(".") && f.endsWith(".parquet")), names)
+  }
+
+  /** [[fixture]] (null option arms, empty attribute maps, histogram arrays,
+    * an exemplar with timestamp and span/trace ids) plus exemplars without
+    * ids or attributes and a resource with no datapoints. */
+  private def landingFixture: Seq[ResourceRow] = fixture ++ Seq(
+    ResourceRow(Map("service.name" -> "edge"), Seq(
+      Datapoint("bare_total", "sum", T0 + 6000, 1, isMonotonic = false,
+        valueInt = Some(-3L), valueDouble = None, count = None, sum = None,
+        bounds = None, bucketCounts = None, dpAttrs = Map.empty,
+        exemplars = Some(Seq(
+          Exemplar(None, None, 0.0, T0 + 5999, Map.empty),
+          Exemplar(Some("a1a2a3a4a5a6a7a8"), None, -1.5, T0 + 5998, Map("x" -> ""))))))),
+    ResourceRow(Map("service.name" -> "idle"), Seq.empty))
+
   test("protobuf codec round-trips the export model") {
     val decoded = OtlpProto.decodeExportRequest(
       OtlpProto.encodeExportRequest(fixture))
@@ -175,8 +196,7 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
       // empty ExportMetricsServiceResponse: one 5-byte zero frame
       assert(resp.body.toSeq === grpcFrame(OtlpProto.emptyResponse).toSeq)
 
-      val files = landedFiles(sourceDir)
-      assert(files.size === 1)
+      assertOnlyLanded(sourceDir, 1)
       val landed = spark.read
         .schema(graft.streaming.OtlpSource.exportSchema)
         .parquet(sourceDir)
@@ -188,6 +208,54 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
       val flat = graft.ingest.OtlpFlatten.convertDatapoints(
         graft.streaming.OtlpSource.explodeExport(landed))
       assert(flat.count() === 6)
+    }
+  }
+
+  test("an Export lands and acks without starting a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try withReceiver() { (sourceDir, port) =>
+      val resp = GrpcTestClient.call(port, ExportPath,
+        grpcFrame(OtlpProto.encodeExportRequest(fixture)))
+      assert(resp.grpcStatus === 0)
+      assertOnlyLanded(sourceDir, 1)
+      // the listener bus delivers in order: every job started before this
+      // marked one is seen before it
+      sc.setJobDescription("landing-marker")
+      try spark.range(1).collect() finally sc.setJobDescription(null)
+      def next() = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      val before = Seq.newBuilder[String]
+      var d = next()
+      while (d != null && d != "landing-marker") { before += d; d = next() }
+      assert(d === "landing-marker", "the listener never saw the marker job")
+      assert(before.result().isEmpty, s"jobs started during the Export: ${before.result()}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the landed file equals the DataFrame write of the same rows") {
+    withReceiver() { (sourceDir, port) =>
+      val resp = GrpcTestClient.call(port, ExportPath,
+        grpcFrame(OtlpProto.encodeExportRequest(landingFixture)))
+      assert(resp.grpcStatus === 0)
+      assertOnlyLanded(sourceDir, 1)
+      val file = landedFiles(sourceDir).head.getPath
+      // the file carries the export schema itself, not just when asked for it
+      assert(spark.read.parquet(file).schema ===
+        graft.streaming.OtlpSource.exportSchema)
+      val landed = spark.read.schema(graft.streaming.OtlpSource.exportSchema)
+        .parquet(file).collect().toSeq
+      val expected = OtlpProto.toDataFrame(spark,
+        OtlpProto.decodeExportRequest(OtlpProto.encodeExportRequest(landingFixture)))
+        .collect().toSeq
+      assert(landed.size === landingFixture.size)
+      assert(landed.sortBy(_.toString) === expected.sortBy(_.toString))
     }
   }
 
@@ -368,7 +436,7 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
         val all = Await.result(Future.sequence(calls), 120.seconds)
         assert(all.map(_.grpcStatus) === Seq.fill(8)(0))
       } finally shared.close()
-      assert(landedFiles(sourceDir).size === 8)
+      assertOnlyLanded(sourceDir, 8)
       val landed = spark.read
         .schema(graft.streaming.OtlpSource.exportSchema)
         .parquet(sourceDir)

@@ -464,6 +464,72 @@ class RemoteReadServerSpec extends SparkSpec {
     }
   }
 
+  /** The exception a scan throws when a file listed at planning time is
+    * gone when read — what a compaction racing a remote read produces. */
+  private def fileNotExist(): Exception = {
+    val dir = Files.createTempDirectory("graft_race").toString
+    spark.range(3).toDF("v").coalesce(1).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+      .foreach(_.delete())
+    intercept[Exception](df.collect())
+  }
+
+  test("a read racing a storage swap is a 503, not a bad request") {
+    import RemoteReadServer.{errorStatus, isStorageRace}
+    val scan = fileNotExist()
+    assert(isStorageRace(scan), scan)
+    assert(errorStatus(scan) === 503)
+    val listing = intercept[Exception](
+      spark.read.parquet(Files.createTempDirectory("graft_race").toString + "/gone"))
+    assert(isStorageRace(listing), listing)
+    assert(errorStatus(listing) === 503)
+    // a tier directory whose first write has not committed a file yet
+    val unwritten = intercept[Exception](
+      spark.read.parquet(Files.createTempDirectory("graft_race").toString))
+    assert(isStorageRace(unwritten), unwritten)
+    assert(errorStatus(unwritten) === 503)
+    // the other arms keep their statuses
+    assert(errorStatus(new IllegalArgumentException("unknown matcher type 9")) === 400)
+    // a bad regex matcher echoes the request in its message: still the
+    // request's fault
+    assert(errorStatus(new java.util.regex.PatternSyntaxException(
+      "Unclosed group", "(PATH_NOT_FOUND", 15)) === 400)
+    assert(errorStatus(new RemoteReadServer.QueryTimeout(1L)) === 503)
+    assert(errorStatus(new RemoteReadServer.BodyTooLarge(1)) === 413)
+
+    // over HTTP: a store whose tiers are gone fails both attempts → 503
+    val src = Files.createTempDirectory("graft_transport_src").toString
+    val empty = new RemoteReadServer(spark,
+      Files.createTempDirectory("graft_empty_store").toString, src, "ws-1", NowA)
+    val port = empty.start()
+    try {
+      val (code, msg) = post(port, "/api/v1/read", Snappy.compress(
+        PromProto.encodeReadRequest(Seq(PromProto.Query(NowA - 60000L, NowA,
+          Seq(PromProto.LabelMatcher(0, "__name__", "evt_a")))))))
+      assert(code === 503, new String(msg, "UTF-8"))
+      assert(new String(msg, "UTF-8").contains("PATH_NOT_FOUND"))
+    } finally empty.stop()
+  }
+
+  test("a storage race is retried once, from scratch") {
+    import RemoteReadServer.retryStorageRace
+    val race = fileNotExist()
+    var calls = 0
+    assert(retryStorageRace { calls += 1; if (calls == 1) throw race; "ok" } === "ok")
+    assert(calls === 2)
+    // a race that persists fails after the one retry
+    calls = 0
+    assert(intercept[Exception](retryStorageRace[String] { calls += 1; throw race }) eq race)
+    assert(calls === 2)
+    // any other failure is not retried
+    calls = 0
+    intercept[IllegalArgumentException](retryStorageRace[String] {
+      calls += 1; throw new IllegalArgumentException("bad matcher")
+    })
+    assert(calls === 1)
+  }
+
   test("ingest endpoint lands an export batch atomically in the source dir") {
     val src = Files.createTempDirectory("graft_transport_src").toString
     withServer(src) { (_, port) =>
