@@ -23,10 +23,10 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // storage codec matches the reference's ZSTD-everywhere posture
-      // (schema.sql:4-63). Measured on the raw tier at sf0.1 (Scratch
-      // codec_ab, warm): 36% fewer bytes than snappy (1.6 vs 2.5 MB), read
-      // parity, ~0.2 s/5 write CPU — at 100 TB that is a third less tier
-      // I/O and storage for a marginal ingest cost.
+      // (schema.sql:4-63). Measured on the raw tier at sf0.1 (the codec_ab
+      // dev probe at commit 5683966, warm): 36% fewer bytes than snappy
+      // (1.6 vs 2.5 MB), read parity, ~0.2 s/5 write CPU — at 100 TB that
+      // is a third less tier I/O and storage for a marginal ingest cost.
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
 

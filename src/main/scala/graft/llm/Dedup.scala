@@ -133,11 +133,12 @@ object Dedup {
     // PERSISTED: sh feeds both the inverted index and the sizes lookup, and
     // those are separate DAG branches — un-cached, the shingle derivation
     // (the expensive stage) evaluates twice and the docs table scans 4× (2×
-    // per evaluation through a union-shaped input; measured via Scratch
-    // scans_ab, r11). Exchange reuse only dedups the self-join's two sides,
-    // not the sizes branch. The cache is hashes-only (~8 B/shingle),
-    // MEMORY_AND_DISK so it spills instead of evicting at scale; callers
-    // release it via CacheHygiene.releaseAll (Verify/Bench already do).
+    // per evaluation through a union-shaped input; measured via the
+    // scans_ab dev probe, r11, in git history at commit 5683966). Exchange
+    // reuse only dedups the self-join's two sides, not the sizes branch.
+    // The cache is hashes-only (~8 B/shingle), MEMORY_AND_DISK so it spills
+    // instead of evicting at scale; callers release it via
+    // CacheHygiene.releaseAll (Verify/Bench already do).
     val sh = docs.filter(size(TextAnalysis.tokens(text)) >= n)
       .select(id.as("doc_id"), shingleHashesNative(text, n).as("sh"))
       .persist()
@@ -578,7 +579,10 @@ object Dedup {
     * (`component`); `converged` says whether the loop reached a fixpoint
     * before `maxIter`. Non-converged labels are still well-defined — an
     * over-segmentation of the true components (dedup keeps too much, never
-    * drops a non-duplicate) — so callers can proceed best-effort or fail. */
+    * drops a non-duplicate) — so callers can proceed best-effort or fail.
+    * `rounds` counts propagation rounds after the seeded initialization,
+    * which already does the first one (r22), so it reads one lower than
+    * r21's logs for the same graph (a seed-converged graph reports 1). */
   final case class ComponentsResult(labels: DataFrame, converged: Boolean,
     rounds: Int)
 

@@ -662,7 +662,12 @@ object Multimodal {
     * ever sorts a whole hot bucket — the topKPerGroup doctrine), and the
     * loser join salts the b-side (anchors, ≤cap per bucket, replicate to
     * every salt; result set unchanged) so the hottest bucket spreads over
-    * nSalts tasks. */
+    * nSalts tasks.
+    *
+    * EAGER, like [[Dedup.components]]: the call persists `hashed` and runs
+    * one `count()` job to fill that cache before it returns the plan, so a
+    * plan-only caller (PlanDump, plan-shape specs) still pays the decode.
+    * Call it where running a job is acceptable. */
   def dHashDedupApply(hashed: DataFrame, maxDist: Int,
       anchorCap: Int = 64, nSalts: Int = 32): DataFrame = {
     // PERSISTED (r19, the dHashPairs contract): `hashed` is usually a lazy

@@ -57,9 +57,9 @@ object SpanDedup {
     * Measured 10× scaling term (r20 re-measurement, quiet machine — the
     * r19 scaladoc's 2.7× was a stale/loaded reading; the close gate's
     * 4.5× is real for the bench's min-of-3 protocol): WARM steady-state
-    * (second `Scratch span_ab` iteration) registered query 2.48→7.08 s
-    * (2.9×), apply chain 1.74→5.69 s (3.3×), of which owners agg
-    * 0.91→1.81 s (2.0×, linear) and the flagged join + per-doc collect
+    * (second `span_ab` iteration, dev probe at commit 5683966) registered
+    * query 2.48→7.08 s (2.9×), apply chain 1.74→5.69 s (3.3×), of which
+    * owners agg 0.91→1.81 s (2.0×, linear) and the flagged join + per-doc collect
     * 1.66→4.93 s (3.0×) — the bench's 4.5× adds first-run scan/codegen
     * init that min-of-3 does not amortize at 10x partition counts. The
     * join+collect stage is the above-linear term and it is DATA-driven,
@@ -107,35 +107,6 @@ object SpanDedup {
       .select(col("doc_id"), col("n_tokens"),
         size(col("kept")).cast("long").as("n_kept"),
         concat_ws(" ", col("kept")).as("kept_text"))
-  }
-
-  /** Dev probes for the Scratch `span_ab` stage decomposition — the apply
-    * chain truncated before (probeOwners) and after (probeCuts) the flagged
-    * join, so the superlinear stage can be named from timings. */
-  private[graft] def probeOwners(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    val wins = windows(docs, id, text)
-      .select(col("doc_id"), col("s"), col("h"), col("h2"))
-    wins.groupBy(col("h"), col("h2"))
-      .agg(min(struct(col("doc_id"), col("s"))).as("own"),
-        count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") >= 2)
-      .select(col("h"), col("h2"),
-        col("own.doc_id").as("own_doc"), col("own.s").as("own_s"))
-  }
-
-  private[graft] def probeCuts(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    val wins = windows(docs, id, text)
-      .select(col("doc_id"), col("s"), col("h"), col("h2"))
-    val owners = wins.groupBy(col("h"), col("h2"))
-      .agg(min(struct(col("doc_id"), col("s"))).as("own"),
-        count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") >= 2)
-      .select(col("h"), col("h2"),
-        col("own.doc_id").as("own_doc"), col("own.s").as("own_s"))
-    wins.join(owners, Seq("h", "h2"))
-      .filter(!(col("doc_id") === col("own_doc") && col("s") === col("own_s")))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("s"))).as("cuts"))
   }
 
   /** Shared window extraction: (doc_id, s, h, h2) per w-token window,

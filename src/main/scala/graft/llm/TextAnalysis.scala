@@ -27,13 +27,6 @@ object TextAnalysis {
 
   def distinctTokenCount(toks: Column): Column = size(array_distinct(toks))
 
-  /** Mean token length via pure arithmetic (chars minus the separators,
-    * divided by token count) — identical expression on the oracle side. */
-  def avgTokenLen(text: Column, toks: Column): Column = {
-    val n = size(toks)
-    (length(text) - n + lit(1)).cast("double") / n
-  }
-
   def stopwordCount(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, t => t.isin(stopwords.map(_.asInstanceOf[Any]): _*)))
 

@@ -8,31 +8,37 @@ import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAg
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Executed-plan audits shared by the Scratch probes and the plan-shape
-  * regression specs. The central question: how many times does a query's
-  * executed TREE physically scan each source path? Textual plan counts
-  * over-report (a cached InMemoryRelation prints its interior FileScan;
-  * AQE prints stages twice), so these walk the actual node tree, crediting
-  * `ReusedExchangeExec` (its child executes elsewhere, once) and following
+/** Executed-plan audits shared by the plan-shape regression specs and the
+  * query builders' own plan checks. The central question: how many times
+  * does a query's executed TREE physically scan each source path? Textual
+  * plan counts over-report (a cached InMemoryRelation prints its interior
+  * FileScan; AQE prints stages twice), so every audit here collects over
+  * one walk of the actual node tree ([[nodes]]), which credits
+  * `ReusedExchangeExec` (its child executes elsewhere, once) and follows
   * adaptive stages to their executed plans. Duplicate fact-table scans are
   * invisible at test scale and a direct multiplier on 100 TB I/O — q_j2
-  * scanned lineitem six times before r11 caught it with this walk. */
+  * scanned lineitem six times before r11 caught it with this walk (the
+  * `j2_ab`/`scans_ab` dev probes that first ran it are in git history at
+  * commit 5683966). */
 object PlanAudit {
+
+  /** Every node of the executed tree, pre-order. An `AdaptiveSparkPlanExec`
+    * is followed to its executed plan and a `QueryStageExec` to its stage
+    * plan; a `ReusedExchangeExec` is a leaf, credited to the one place its
+    * child executes. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => plan.children.flatMap(nodes)
+  })
 
   /** All source paths scanned by the executed tree, one entry per physical
     * scan (so a path scanned twice appears twice). The DataFrame must have
     * been EXECUTED first — under AQE the pre-execution tree holds
     * unresolved stages. */
-  def scannedPaths(plan: SparkPlan): Seq[String] = {
-    val self = plan match {
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString)
-      case a: AdaptiveSparkPlanExec => scannedPaths(a.executedPlan)
-      case q: QueryStageExec => scannedPaths(q.plan)
-      case _: ReusedExchangeExec => Seq.empty
-      case _ => Seq.empty
-    }
-    self ++ plan.children.flatMap(scannedPaths)
+  def scannedPaths(plan: SparkPlan): Seq[String] = nodes(plan).flatMap {
+    case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+    case _ => Nil
   }
 
   /** Execute `df` (noop-sink, forcing every column) and return path →
@@ -62,37 +68,36 @@ object PlanAudit {
     * (partial and final halves both appear). Unlike [[scannedPaths]] this
     * needs no execution first: the pre-execution adaptive tree already holds
     * every aggregate node. */
-  def aggregateFunctions(plan: SparkPlan): Seq[AggregateFunction] = {
-    val self = plan match {
-      case a: AdaptiveSparkPlanExec => aggregateFunctions(a.executedPlan)
-      case q: QueryStageExec => aggregateFunctions(q.plan)
-      case r: ReusedExchangeExec => aggregateFunctions(r.child)
+  def aggregateFunctions(plan: SparkPlan): Seq[AggregateFunction] =
+    nodes(plan).flatMap {
       case h: HashAggregateExec => h.aggregateExpressions.map(_.aggregateFunction)
       case o: ObjectHashAggregateExec => o.aggregateExpressions.map(_.aggregateFunction)
       case s: SortAggregateExec => s.aggregateExpressions.map(_.aggregateFunction)
-      case _ => Seq.empty
+      case _ => Nil
     }
-    self ++ plan.children.flatMap(aggregateFunctions)
-  }
 
   /** Every shuffle exchange in the executed tree — the audit behind a
     * "scan-speed, zero-shuffle" claim: a per-row projection battery
     * (Gopher/C4 signals, chunking) must execute with NO exchange at all,
     * and its registered query form with exactly ONE (the deterministic
     * dump's global sort). Reused exchanges credit their one execution. */
-  def shuffleExchanges(plan: SparkPlan): Seq[String] = {
-    def walk(p: SparkPlan): Seq[String] = {
-      val self = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _: ReusedExchangeExec => Seq.empty
-        case e: ShuffleExchangeLike => Seq(e.simpleString(120))
-        case _ => Seq.empty
-      }
-      self ++ p.children.flatMap(walk)
-    }
-    walk(plan)
-  }
+  def shuffleExchanges(plan: SparkPlan): Seq[String] =
+    nodes(plan).collect { case e: ShuffleExchangeLike => e.simpleString(120) }
+
+  /** Duplicate exchange groups: shuffles whose whole canonicalized child
+    * subtrees are identical modulo expression, plan, query-stage and codegen
+    * ids, i.e. the same data shuffled twice because exchange reuse did not
+    * catch it. Identical exchange keys over different inputs (a two-phase
+    * top-k) are not duplicates. One entry per group: its size and the
+    * exchange's line. Like [[scannedPaths]], needs the executed plan. */
+  def duplicateExchanges(plan: SparkPlan): Seq[String] =
+    nodes(plan).collect { case e: ShuffleExchangeLike => e }
+      .groupBy(e => (e.simpleString(200) + "\n" + e.child.canonicalized.toString)
+        .replaceAll("#\\d+L?", "#x").replaceAll("plan_id=\\d+", "p")
+        .replaceAll("QueryStage \\d+", "QueryStage x")
+        .replaceAll("\\*\\(\\d+\\)", "*(x)"))
+      .collect { case (k, g) if g.size > 1 => s"${g.size}x ${k.linesIterator.next()}" }
+      .toSeq.sorted
 
   /** Window nodes that rank corpus-scale data in single-expression
     * partitions — the "whole-group window" shape whose partition count is
@@ -115,17 +120,9 @@ object PlanAudit {
       case leaf if leaf.children.isEmpty => true // any scan/leaf counts
       case other => other.children.exists(unaggregatedScanBelow)
     }
-    def walk(p: SparkPlan): Seq[String] = {
-      val self = p match {
-        case w: WindowExec if w.partitionSpec.size < 2 &&
-            unaggregatedScanBelow(w.child) =>
-          Seq(w.simpleString(120))
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => Seq.empty
-      }
-      self ++ p.children.flatMap(walk)
+    nodes(plan).collect {
+      case w: WindowExec if w.partitionSpec.size < 2 &&
+          unaggregatedScanBelow(w.child) => w.simpleString(120)
     }
-    walk(plan)
   }
 }

@@ -220,8 +220,8 @@ object HistoQueries {
       // PERSISTED: cnt feeds three DAG branches (months, firsts, the grid
       // fill join), and Catalyst re-expands an un-cached subtree per branch —
       // measured at sf0.1 as SIX lineitem FileScans with zero exchange
-      // reuse (Scratch j2_ab). The aggregate is tiny (flags × months ×
-      // bounds), so caching it collapses the fact-table I/O to one scan —
+      // reuse (j2_ab dev probe, commit 5683966). The aggregate is tiny
+      // (flags × months × bounds), so caching it collapses the fact-table I/O to one scan —
       // the difference between 1× and 6× of 100 TB. Verify/Bench release it
       // via CacheHygiene.releaseAll.
       val cnt = base.groupBy(col("flag"), col("month"), col("le"))

@@ -28,10 +28,11 @@ object LoadGen {
   val StatusCodes = Seq("200", "201", "400", "404", "500")
 
   /** One soak's emissions and ground truth. `exports` is one element per
-    * micro-batch; `counterTotals` maps series attributes to the sum of all
-    * applied increments NET of resets folded as the reference's converter
-    * does (raw value re-emitted after reset); `latencies` is every recorded
-    * histogram sample. */
+    * micro-batch; `counterTotals` maps series attributes to the sum of the
+    * deltas the converter derives from the emitted values
+    * ([[StreamingTemporality.foldSeries]]: a drop is a reset and re-emits
+    * the raw value, anything else is value − last); `latencies` is every
+    * recorded histogram sample. */
   final case class Soak(
       exports: Seq[Seq[Row]],
       counterTotals: Map[(String, String, String), Long],
@@ -89,11 +90,18 @@ object LoadGen {
             val inc = rnd.nextInt(10) + 1L
             val key = (s"requests_total_$i", s"type_${i % 3}",
               StatusCodes(rnd.nextInt(StatusCodes.length)))
+            val last = counterState.get(key)
             if (resetEvery > 0 && i == 0 && tick % resetEvery == 0)
               counterState(key) = 0L // simulated process restart
             val v = counterState.getOrElse(key, 0L) + inc
             counterState(key) = v
-            counterTotals(key) = counterTotals.getOrElse(key, 0L) + inc
+            // a restart whose new value does not drop below the last one
+            // cannot be told from an increment: the converter stores v − last
+            val delta = last match {
+              case Some(l) if v >= l => v - l
+              case _ => v
+            }
+            counterTotals(key) = counterTotals.getOrElse(key, 0L) + delta
             datapoints += 1
             dps += Row(key._1, "sum", tsMs, 1, true, null, v.toDouble, null,
               null, null, null,

@@ -150,18 +150,6 @@ object StreamingTemporality extends Serializable {
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(convertGroup)
   }
 
-  /** ST3 — event-time bounds before conversion: watermark for state cleanup /
-    * late-data policy, plus the validation-mirror future cut (P1's too_future
-    * rule, processor.go:129-134). `tsCol` must be a TimestampType column. */
-  def withEventTimeBounds(df: DataFrame, tsCol: String,
-      lateness: String = "10 minutes", maxFutureMs: Long = 24L * 3600 * 1000,
-      nowMs: Option[Long] = None): DataFrame = {
-    val cut = nowMs.map(n => lit(n + maxFutureMs))
-      .getOrElse(unix_millis(current_timestamp()) + maxFutureMs)
-    df.withWatermark(tsCol, lateness)
-      .filter(unix_millis(col(tsCol)) <= cut)
-  }
-
   /** ST4 — streaming tumbling 1m rollup with watermark-bounded state: the
     * streaming twin of the metrics_1m MV (schema.sql:146-192). `max_by` gives
     * anyLast-by-event-time. The 5m/1h tiers cascade by re-reading this sink in

@@ -2,13 +2,20 @@ package graft.plans
 
 import graft.SparkSpec
 
-/** Physical scan budgets for every benched query: no executed plan may scan
-  * a source path more times than its documented budget. Duplicate fact
+/** Physical scan budgets for every registered query: no executed plan may
+  * scan a source path more times than its documented budget. Duplicate fact
   * scans cost nothing at spec scale and multiply full-table I/O at 100 TB —
   * q_j2 silently re-expanded its month-grid aggregate into SIX lineitem
   * scans and jaccardPairs evaluated its shingle stage twice before the r11
-  * audit (Scratch scans_ab) caught them. This spec pins the audit so a
-  * future refactor cannot regress a 1× query back to N×.
+  * audit (the `scans_ab` dev probe, in git history at commit 5683966)
+  * caught them. This spec pins the audit so a future refactor cannot
+  * regress a 1× query back to N×.
+  *
+  * The same executions pin r21's exchange audit: no benched query may
+  * shuffle the same data twice ([[PlanAudit.duplicateExchanges]]) beyond
+  * its documented allowance — r21's winnowPairs index persist took
+  * q_dedup_winnow from three such groups (the df-cut aggregate shuffled
+  * 4×) to the two self-join groups allowed below.
   *
   * Budget = 1 unless the query's INPUT is legitimately multi-scan:
   * planted-duplicate union fixtures read the table once per branch with
@@ -167,6 +174,22 @@ class PlanScanBudgetSpec extends SparkSpec {
     // to save the narrow 2-column count scan would cost more at 100 TB)
     "q_sample_mixture" -> 2)
 
+  // benched query → duplicate exchange groups it may keep. Each group below
+  // is a self-join (or a twice-joined side table) over a PERSISTED relation:
+  // the two sides read the same cache through separate TableCacheQueryStages
+  // and AQE does not reuse the exchange, so the same rows shuffle twice.
+  // Open waste, not a contract — remove an entry once its query shuffles once.
+  private val duplicateExchangesAllowed: Map[String, Int] = Map(
+    // minHashCandidates' band self-join: both sides hash (band, key)
+    "q_dedup_minhash" -> 1,
+    // simHashPairs' chunk self-join: both sides hash (band, key, cell)
+    "q_dedup_simhash" -> 1,
+    // dHashPairs' band self-join over the WAV envelope hashes
+    "q_mm_dedup_ahash" -> 1,
+    // winnowPairs: the kinv self-join's two sides on f, and the sizes
+    // aggregate on doc_id joined once per side (nf_a, nf_b)
+    "q_dedup_winnow" -> 2)
+
   // verify-only queries are still EXECUTED by Verify every round — a scan
   // regression there costs correctness-gate wall-clock even though it never
   // touches the bench signal, so they get budgets too (r16 ADVICE: moving
@@ -177,20 +200,31 @@ class PlanScanBudgetSpec extends SparkSpec {
   test("every budget entry names a registered query (no dead entries)") {
     // a budget key that outlives its query is silently unaudited while
     // still reading as covered (r16 ADVICE) — fail fast instead
-    val dead = budgets.keySet -- graft.SparkEntry.queries.keySet
+    val dead = (budgets.keySet ++ duplicateExchangesAllowed.keySet) --
+      graft.SparkEntry.queries.keySet
     assert(dead.isEmpty, s"budget entries for unregistered queries: $dead")
   }
 
-  test("no registered query exceeds its physical scan budget") {
+  test("no registered query exceeds its scan budget; no benched query shuffles the same data twice") {
     val over = audited.flatMap { name =>
       try {
         val budget = budgets.getOrElse(name, 1)
-        val dup = PlanAudit.overBudgetScans(
-          graft.SparkEntry.queries(name)(spark, Sf), budget)
-        if (dup.isEmpty) None
-        else Some(s"$name exceeds budget $budget: " + dup.map {
-          case (p, n) => s"${p.split('/').last}x$n"
-        }.mkString(", "))
+        val df = graft.SparkEntry.queries(name)(spark, Sf)
+        val dup = PlanAudit.overBudgetScans(df, budget)
+        val scans =
+          if (dup.isEmpty) None
+          else Some(s"$name exceeds budget $budget: " + dup.map {
+            case (p, n) => s"${p.split('/').last}x$n"
+          }.mkString(", "))
+        val groups =
+          if (graft.SparkEntry.verifyOnly(name)) Nil
+          else PlanAudit.duplicateExchanges(df.queryExecution.executedPlan)
+        val allowed = duplicateExchangesAllowed.getOrElse(name, 0)
+        val exchanges =
+          if (groups.size <= allowed) None
+          else Some(s"$name shuffles the same data twice in ${groups.size} " +
+            s"exchange groups (allowed $allowed): " + groups.mkString(" | "))
+        scans ++ exchanges
       } finally graft.CacheHygiene.releaseAll(spark)
     }
     assert(over.isEmpty, over.mkString("; "))

@@ -1,13 +1,15 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{GraftApp, GraftConfig, SparkSpec}
 import graft.histo.{HistogramFunctions, HistogramMath}
-import graft.model.Bucket
+import graft.model.{Bucket, MetricPoint}
 import graft.sink.MetricsSink
 
 /** E2E soak (reference: test/otlp_generator.go:150-204): the 4-tier latency
@@ -122,5 +124,45 @@ class LoadSoakSpec extends SparkSpec {
       assert(n <= cfg.compactMaxFiles,
         s"partition ${p.getName} holds $n parts after soak compaction")
     }
+  }
+
+  test("counterTotals is the converter's fold of the emitted counters, across undetectable resets") {
+    // a restart re-emits v = inc (1–10); when the series' last value was not
+    // above v the converter sees no drop and stores v − last, not inc
+    val nBatches = 2
+    val ticks = 30
+    val tickMs = 1000L
+    val resetEvery = 3
+    val startMs = NowMs - nBatches * ticks * tickMs
+    var undetectable = 0
+    (1 to 20).foreach { seed =>
+      val soak = LoadGen.generate(nBatches, ticks, tickMs, endMs = NowMs,
+        seed = seed, resetEvery = resetEvery)
+      val series = soak.exports.flatten.flatMap(_.getSeq[Row](1))
+        .filter(_.getString(1) == "sum")
+        .groupBy { dp =>
+          val attrs = dp.getMap[String, String](11)
+          (dp.getString(0), attrs("counter_type"), attrs("status"))
+        }
+      val folded = series.map { case (key, dps) =>
+        val points = dps.map(dp => MetricPoint("ws", 0L, key._1,
+          new Timestamp(dp.getLong(2)), metric_type = 2, temporality = 1,
+          is_monotonic = true, value = Some(dp.getDouble(6)), count = None,
+          sum = None, buckets = Nil))
+        key -> StreamingTemporality.foldSeries(None, points)._2
+          .flatMap(_.delta).sum.toLong
+      }
+      assert(soak.counterTotals === folded, s"seed $seed")
+      series.foreach { case ((metric, _, _), dps) =>
+        dps.sliding(2).foreach {
+          case Seq(prev, cur) if metric == "requests_total_0" &&
+              (cur.getLong(2) - startMs) / tickMs % resetEvery == 0 &&
+              cur.getDouble(6) >= prev.getDouble(6) =>
+            undetectable += 1
+          case _ =>
+        }
+      }
+    }
+    assert(undetectable > 0, "no seed restarted a counter without a drop")
   }
 }
