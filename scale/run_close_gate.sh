@@ -4,9 +4,13 @@
 # (r15 #7 — round 16 shipped its scale fix without re-running 10x; this
 # script is why that can't happen silently again). Exits non-zero if any
 # stage fails, INCLUDING a ratio-gate breach.
+#
+# Usage: scale/run_close_gate.sh <round-tag>   (e.g. r23)
+# The tag names every log and committed close artifact, so one round's run
+# never overwrites another's.
+R=${1:?usage: scale/run_close_gate.sh <round-tag> (e.g. r23)}
 set -x
-cd /root/repo
-R=r22
+cd "$(dirname "$0")/.."
 RC_ALL=0
 step() { echo "STEP_$1_RC=$2" >> /tmp/${R}c_status.log; [ "$2" -ne 0 ] && RC_ALL=1; }
 

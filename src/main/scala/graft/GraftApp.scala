@@ -27,11 +27,13 @@ import graft.streaming.{OtlpSource, StreamingTemporality}
   *   source.dir, storage.dir, checkpoint.dir,
   *   processor.workspace_id, processor.convert_to_delta,
   *   processor.enable_exemplars, processor.max_exemplars_per_metric,
-  *   processor.flush_interval_ms, source.max_files_per_trigger,
+  *   processor.flush_interval_ms, processor.state_ttl_ms,
+  *   source.max_files_per_trigger, source.clean, source.archive_dir,
   *   maintenance.rollup_every_batches, maintenance.retention_drop,
   *   maintenance.compact_max_files, maintenance.publish_routing,
   *   maintenance.merge_tier_buckets, transport.port, transport.grpc_port,
   *   transport.query_timeout_ms
+  * (`pipeline.properties` at the repo root lists each with its default).
   *
   * The typed state path carries attributes and exemplar payloads through
   * conversion, so both modes store full rows.

@@ -16,8 +16,8 @@ object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      // graft optimizer rules (DeferProjectPastSort — ordered dumps must not
-      // double-execute their projection in the range-sampling pass)
+      // graft extensions: the RollupRouting rule (inert until its confs are
+      // set) and the SQL spellings of the native expressions
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")

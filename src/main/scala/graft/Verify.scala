@@ -40,7 +40,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      // one part file per query through a shuffle, not coalesce(1): with no
+      // final sort to cut the plan, coalesce(1) would run the whole last
+      // stage (often scan + projection battery) in a single task
+      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

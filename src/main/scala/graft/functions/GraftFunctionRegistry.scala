@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * width, stopword lists) must be LITERALS: they shape the expression tree
   * itself (array widths, generated loops), exactly like the `k` in a SQL
   * `approx_percentile`. Registration lives in
-  * [[graft.plans.GraftExtensions]] next to the optimizer rules. */
+  * [[graft.plans.GraftExtensions]] next to the optimizer rule. */
 object GraftFunctionRegistry {
 
   private type Builder = Seq[Expression] => Expression

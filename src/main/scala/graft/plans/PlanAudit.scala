@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
@@ -79,10 +79,18 @@ object PlanAudit {
   /** Every shuffle exchange in the executed tree — the audit behind a
     * "scan-speed, zero-shuffle" claim: a per-row projection battery
     * (Gopher/C4 signals, chunking) must execute with NO exchange at all,
-    * and its registered query form with exactly ONE (the deterministic
-    * dump's global sort). Reused exchanges credit their one execution. */
+    * as an operator and as its registered query. Reused exchanges credit
+    * their one execution. */
   def shuffleExchanges(plan: SparkPlan): Seq[String] =
     nodes(plan).collect { case e: ShuffleExchangeLike => e.simpleString(120) }
+
+  /** Global sorts in the executed tree: `SortExec` with `global = true`, a
+    * range shuffle whose boundary-sampling pass runs its whole child an
+    * extra time. A top-k (`orderBy` + `limit`) plans as
+    * `TakeOrderedAndProject`, and window, aggregate and join sorts are
+    * per-partition, so none of those appear here. */
+  def globalSorts(plan: SparkPlan): Seq[String] =
+    nodes(plan).collect { case s: SortExec if s.global => s.simpleString(120) }
 
   /** Duplicate exchange groups: shuffles whose whole canonicalized child
     * subtrees are identical modulo expression, plan, query-stage and codegen

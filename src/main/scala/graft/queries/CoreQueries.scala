@@ -51,7 +51,6 @@ object CoreQueries {
         .select(lit("F").as("src"), col("o_orderkey"))
         .unionAll(o.filter(col("o_orderstatus") === "O")
           .select(lit("O").as("src"), col("o_orderkey")))
-        .orderBy(col("src"), col("o_orderkey"))
     }),
 
     // Joins come free from the DataFrame API (SURVEY §2.3); the dimension side
@@ -64,7 +63,6 @@ object CoreQueries {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("order_cnt"),
           sum(cents(col("o_totalprice"))).as("total_cents"))
-        .orderBy(col("n_name"))
     }),
 
     // F1/F10/F16-ish scalar battery: scalar extraction from the JSON-ish props
@@ -73,10 +71,6 @@ object CoreQueries {
     // the regex path benched ~3 s cold / +0.4 s warm at sf0.1 against ~0.9 s
     // for substr (r3 verdict task 4). Regex coverage (F1/F16) stays exercised
     // by q_p4_matchers' rlike matchers and the fingerprint normalize.
-    // plain orderBy on purpose: the DeferProjectPastSort rule pulls this
-    // projection above the sort, so the string battery runs once (the
-    // explicit RangeSort helper is for shapes the rule can't see — a filter
-    // or window between projection and sort)
     "q_f_scalars" -> ((s, d) => {
       EventsMetrics.fromEvents(s, d).select(
         col("event_id"),
@@ -86,7 +80,6 @@ object CoreQueries {
         length(col("props")).cast("long").as("props_len"),
         ascii(col("event_type")).cast("long").as("etype_ascii"),
         col("ts_ms"))
-        .orderBy(col("event_id"))
     }),
 
     // F3/F4 — time bucketing as ms-epoch floors (engine-portable twin of
@@ -96,7 +89,6 @@ object CoreQueries {
         .groupBy((col("ts_ms") - pmod(col("ts_ms"), lit(300000L))).as("bucket5_ms"))
         .agg(count(lit(1)).as("cnt"),
           sum(cents(col("value"))).as("value_cents"))
-        .orderBy(col("bucket5_ms"))
     }))
 
   def oracles: Map[String, String] = Map(

@@ -83,7 +83,6 @@ object CurationQueries {
           Html.toText(col("html")).as("clean_text"),
           length(col("html")).cast("long").as("n_raw"),
           length(Html.toText(col("html"))).cast("long").as("n_clean"))
-        .orderBy(col("doc_id"))
     }),
 
     // Robots meta opt-out gate (r18): the publisher-opt-out pass a
@@ -111,7 +110,6 @@ object CurationQueries {
           lit("</head><body><p>"), col("text"), lit("</p></body></html>")))
         .filter(!graft.llm.Html.robotsNoindex(col("html")))
         .select(col("doc_id"), pmod(col("doc_id"), lit(6)).cast("long").as("arm"))
-        .orderBy(col("doc_id"))
     }),
 
     // BM25 targeted mining: top-50 docs for the literal term query,
@@ -130,7 +128,6 @@ object CurationQueries {
       val raw = Tables.documents(s, d)
       Dsir.withWeights(raw, raw.filter(col("lang") === "en"), col("text"))
         .select(col("doc_id"), col("lang"), col("dsir_w"))
-        .orderBy(col("doc_id"))
     }),
 
     // The selection step: top-100 most target-like docs, deterministic
@@ -159,7 +156,6 @@ object CurationQueries {
       LmTrain.withTrainedNll(docs, col("text"),
           LmTrain.collectModel(LmTrain.trainModel(docs, col("text"))))
         .select(col("doc_id"), col("n_win"), col("nll_t"), col("lm_t_mw"))
-        .orderBy(col("doc_id"))
     }),
 
     // Exact substring duplication (Lee et al. 2022): per-doc w-token-window
@@ -167,7 +163,6 @@ object CurationQueries {
     // windows and are excluded (matching the oracle's len(t) >= W guard).
     "q_dedup_substring" -> ((s, d) => {
       SpanDedup.report(docsSpanFix(s, d), col("doc_id"), col("text"))
-        .orderBy(col("doc_id"))
     }),
 
     // Substring-dedup APPLY: duplicated w-token windows keep only their
@@ -175,7 +170,6 @@ object CurationQueries {
     // docs lose their copied prefix, base docs (the owners) keep theirs.
     "q_dedup_substring_apply" -> ((s, d) => {
       SpanDedup.dedupApply(docsSpanFix(s, d), col("doc_id"), col("text"))
-        .orderBy(col("doc_id"))
     }),
 
     // Engine-native document embedder (r16 verdict #6): fixed-dim
@@ -191,11 +185,6 @@ object CurationQueries {
         .select(col("doc_id"),
           aggregate(col("embedding"), lit(0L), (a, v) => a + v).as("n_grams"),
           concat_ws(",", col("embedding")).as("embedding_csv"))
-        // persist-before-sort (r22): the hashed-embedding battery sits
-        // below the ordered dump's sampler otherwise. CacheHygiene
-        // releases per query.
-        .persist()
-        .orderBy(col("doc_id"))
     }),
 
     // End-to-end semantic dedup from TEXT: embed (hashed bigrams) →
@@ -218,7 +207,6 @@ object CurationQueries {
           centroids = semdedupTextCentroids(s, d), tau = 0.999, nBits = 0,
           anchorCap = 64)
         .select(col("vec_id"))
-        .orderBy(col("vec_id"))
     }),
 
     // The paper's literal all-pairs form over the same text→embed chain —
@@ -232,7 +220,6 @@ object CurationQueries {
               graft.llm.Embed.hashedEmbedding(col("text")).as("embedding")),
           tau = 0.999, nBits = 0)
         .select(col("vec_id"))
-        .orderBy(col("vec_id"))
     }),
 
     // Cluster-balanced subsample: integer-L2 cells over the CAPPED stride
@@ -247,7 +234,6 @@ object CurationQueries {
             col("vec_id") < 1616),
           k = 10)
         .select(col("cell"), col("vec_id"))
-        .orderBy(col("cell"), col("vec_id"))
     }),
 
     // URL canonicalization (r17 verdict #4 — the crawl's first mile):
@@ -263,7 +249,6 @@ object CurationQueries {
         .select(col("doc_id"), col("url"),
           graft.llm.UrlCuration.canonicalize(col("url")).as("url_canon"))
         .withColumn("host", graft.llm.UrlCuration.host(col("url_canon")))
-        .orderBy(col("doc_id"))
     }),
 
     // URL dedup keep-first-fetch: one map-side-combined groupBy on the
@@ -278,7 +263,6 @@ object CurationQueries {
         .groupBy(col("url_canon"))
         .agg(min(col("doc_id")).as("keeper_id"),
           count(lit(1)).as("n_fetches"))
-        .orderBy(col("url_canon"))
     }),
 
     // Per-domain cap (r18): the crawl-balance pass after URL dedup — no
@@ -296,7 +280,6 @@ object CurationQueries {
         .withColumn("host", graft.llm.UrlCuration.host(col("url_canon")))
       graft.llm.Sampling.topKPerGroup(kept, col("host"), col("doc_id"), k = 10)
         .select(col("host"), col("doc_id"))
-        .orderBy(col("host"), col("doc_id"))
     }),
 
     // Group-aware train/val/test split (r18): the leakage guard every
@@ -317,7 +300,6 @@ object CurationQueries {
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)))
         .groupBy(col("host"), col("split"))
         .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("host"))
     }),
 
     // URL blocklist filter (the C4 badlist / RefinedWeb URL-filter pass):
@@ -327,17 +309,15 @@ object CurationQueries {
     // exact-blocked domain, two suffix-blocked ones, and a /casino/
     // pattern arm; the dot-suffix rule must NOT catch notbad-style
     // siblings (UrlCurationSpec pins that boundary).
-    // PERSIST barrier, not RangeSort (r21): the blocklist FILTER references
-    // the canonicalize battery, and predicate pushdown drags it below any
-    // exchange/projection back into the scan stage — the r19 RangeSort
-    // shape still executed the battery inlined ~3× inside the pushed
-    // filter (measured: 113 regexp ops on the Filter node) plus once in
-    // the output projection, all in the scan-side stage the range sampler
-    // runs twice. The cache boundary is the only shape Catalyst cannot
-    // re-inline through: the battery runs exactly once per row into a
-    // (doc_id, url_canon, host) relation — the URL table, input-sized —
-    // and the blocklist predicate + sort read the cache (the q_mm_phash
-    // persist-before-sort precedent; CacheHygiene releases per query).
+    // PERSIST barrier (r21): the blocklist FILTER references the
+    // canonicalize battery, and predicate pushdown drags it below any
+    // projection back into the scan (measured on the r19 shape: the battery
+    // inlined ~3× inside the pushed filter, 113 regexp ops on the Filter
+    // node, plus once in the output projection). The cache boundary is the
+    // only shape Catalyst cannot re-inline through: the battery runs exactly
+    // once per row into a (doc_id, url_canon, host) relation — the URL
+    // table, input-sized — and the blocklist predicate reads the cache
+    // (CacheHygiene releases per query).
     "q_url_filter" -> ((s, d) => {
       val canon = docsUrlFix(s, d)
         .select(col("doc_id"),
@@ -346,7 +326,6 @@ object CurationQueries {
         .persist()
       graft.llm.UrlCuration.blocklistFilter(canon, col("url_canon"))
         .select(col("doc_id"), col("host"), col("url_canon"))
-        .orderBy(col("doc_id"))
     }))
 
   /** URL fixture host pool — position 2 is mixed-case (canonicalization

@@ -73,7 +73,6 @@ object HistoQueries {
           round(element_at(col("qs"), 1), 6).as("p50"),
           round(element_at(col("qs"), 2), 6).as("p95"),
           round(element_at(col("qs"), 3), 6).as("p99"))
-        .orderBy(col("flag"))
     }),
 
     // A9 — merge per-(flag, linestatus) bucket groups into per-flag histograms
@@ -90,7 +89,6 @@ object HistoQueries {
           Seq(col("flag")), col("buckets"))
         .select(col("flag"), explode(col("buckets")).as("b"))
         .select(col("flag"), col("b.le").as("le"), col("b.count").as("count"))
-        .orderBy(col("flag"), col("le"))
     }),
 
     // A10 — delta→cumulative→delta round trip: cum is the prefix sum, rt must
@@ -105,7 +103,6 @@ object HistoQueries {
           col("z.buckets.count").as("delta_count"),
           col("z.cum.count").as("cum_count"),
           col("z.rt.count").as("rt_count"))
-        .orderBy(col("flag"), col("le"))
     }),
 
     // A11 — exponential-histogram percentile at scale 0 over l_extendedprice;
@@ -123,7 +120,6 @@ object HistoQueries {
             lit(null).cast(EmptyExpBuckets), lit(50.0)), 6).as("p50"),
           round(HistogramFunctions.exp_histogram_quantile(lit(0), lit(0L), col("pos"),
             lit(null).cast(EmptyExpBuckets), lit(90.0)), 6).as("p90"))
-        .orderBy(col("flag"))
     }),
 
     // A12 — merge exponential histograms of DIFFERENT scales (linestatus 'O'
@@ -156,7 +152,6 @@ object HistoQueries {
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(50.0)), 6).as("p50"),
           round(HistogramFunctions.exp_histogram_quantile(col("m.scale"),
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(90.0)), 6).as("p90"))
-        .orderBy(col("flag"))
     }),
 
     // A12+A11 negative walk — merge exp-histograms whose NEGATIVE side is
@@ -190,7 +185,6 @@ object HistoQueries {
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(25.0)), 6).as("p25"),
           round(HistogramFunctions.exp_histogram_quantile(col("m.scale"),
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(90.0)), 6).as("p90"))
-        .orderBy(col("flag"))
     }),
 
     // A15 — quantiles over RAW values (reference test/validate_percentiles.go:
@@ -205,7 +199,6 @@ object HistoQueries {
           round(element_at(col("qs"), 1), 6).as("p50"),
           round(element_at(col("qs"), 2), 6).as("p95"),
           round(element_at(col("qs"), 3), 6).as("p99"))
-        .orderBy(col("flag"))
     }),
 
     // J2 — bucket alignment by bound over time: per-flag monthly CUMULATIVE
@@ -249,7 +242,6 @@ object HistoQueries {
         .select(col("flag"), col("month"), explode(col("delta")).as("b"))
         .select(col("flag"), col("month"), col("b.le").as("le"),
           col("b.count").as("delta_count"))
-        .orderBy(col("flag"), col("month"), col("le"))
     }))
 
   def oracles: Map[String, String] = Map(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{OtlpFlatten, Validation}
@@ -22,16 +22,13 @@ object IngestQueries {
     * exercised; int-vs-double value split by user parity (otlp.go:147-155);
     * histogram bounds/counts, count/sum, and overlapping resource/dp
     * attribute maps all derived from (user_id, value, event_id). */
-  private def wire(s: SparkSession, d: String): DataFrame =
-    wireFrom(EventsMetrics.fromEvents(s, d))
-
   // NOTE on the exemplar transform below: its per-element struct/map
   // allocation dominates; the element-invariant subtrees (trace concat,
   // timestamp_millis) DO re-evaluate per element in the interpreted lambda,
   // but hoisting them into aliases does not help — CollapseProject inlines
   // single-use aliases back into the lambda body (measured: no change).
-  private def wireFrom(base: DataFrame): DataFrame =
-    base.select(
+  private def wire(s: SparkSession, d: String): DataFrame =
+    EventsMetrics.fromEvents(s, d).select(
       col("event_id"), col("ts_ms"), col("service_name"),
       when(col("event_id") % 97 === 0, "bogus")
         .when(col("event_type") === "view", "gauge")
@@ -68,12 +65,8 @@ object IngestQueries {
     // S3 — the per-type switch as one codegen projection; output flattened to
     // oracle-friendly scalars (bucket struct internals are covered by
     // n_buckets / bucket_total / +Inf-pad checks).
-    // ordered via RangeSort.projectSorted: the wire fixture's exemplar
-    // construction is the dominant per-row cost, and a plain orderBy would
-    // execute it twice (range-boundary sampling + the real pass)
-    "q_s3_per_type" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), Seq(col("event_id"))) { base =>
-      OtlpFlatten.convertDatapoints(wireFrom(base))
+    "q_s3_per_type" -> ((s, d) =>
+      OtlpFlatten.convertDatapoints(wire(s, d))
         .select(
           col("event_id"), col("kind"),
           col("metric_type").cast("int").as("metric_type"),
@@ -87,22 +80,16 @@ object IngestQueries {
           coalesce(element_at(col("buckets"), -1).getField("le") ===
             Double.PositiveInfinity, lit(false)).as("last_le_is_inf"),
           coalesce(size(col("exemplars")), lit(-1)).as("n_exemplars"),
-          Promread.labelsKey(col("attributes")).as("labels"))
-    }),
+          Promread.labelsKey(col("attributes")).as("labels"))),
 
     // S4 — exemplar cap: first-N kept when enabled, typed-null when disabled
     // (processor.go:100-104); the disabled branch keeps the full exemplar
-    // schema (Validation.scala round-2 schema-drift fix).
-    // RangeSort + a dedicated capped projection (r7 bench regression fix):
-    // a plain orderBy left the exemplar construction BELOW the range
-    // exchange — the boundary-sampling pass executed it a second time and
-    // the full struct array shuffled through the wire — and spelling the
-    // cap per consumer column re-ran the array-copying slice three times.
-    // Now the shuffle sees only the scan, the capped array is materialized
-    // once post-shuffle, and every check column reads from it.
-    "q_s4_exemplars" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), Seq(col("event_id"))) { base =>
-      wireFrom(base)
+    // schema (Validation.scala round-2 schema-drift fix). The capped array
+    // is materialized once and every check column reads from it: spelling
+    // the cap per consumer column re-ran the array-copying slice three times
+    // (r7 bench regression fix).
+    "q_s4_exemplars" -> ((s, d) =>
+      wire(s, d)
         .select(col("event_id"),
           Validation.capExemplars(col("exemplars"), enabled = true, max = 10)
             .as("capped"))
@@ -111,18 +98,16 @@ object IngestQueries {
           size(col("capped")).as("n_capped"),
           Validation.capExemplars(col("capped"), enabled = false).isNull
             .as("disabled_is_null"),
-          element_at(col("capped"), 1).getField("spanId").as("first_span"))
-    }),
+          element_at(col("capped"), 1).getField("spanId").as("first_span"))),
 
     // S5 — attribute merge, datapoint wins on key collision (otlp.go:332-344);
     // rendered through the sorted labels key so map ordering can't leak in.
     "q_s5_attr_merge" -> ((s, d) => {
-      wireFrom(EventsMetrics.fromEvents(s, d)).select(
+      wire(s, d).select(
         col("event_id"),
         Promread.labelsKey(
           OtlpFlatten.mergeAttributes(col("resource_attrs"), col("dp_attrs")))
           .as("merged"))
-        .orderBy(col("event_id"))
     }),
 
     // Document-source round-trip: documents re-encoded line-per-row JSON
@@ -139,7 +124,7 @@ object IngestQueries {
         .write.mode("overwrite").text(dir)
       val (clean, _) = graft.sources.DocumentSource.quarantine(
         graft.sources.DocumentSource.jsonl(s, dir))
-      clean.orderBy(col("doc_id"))
+      clean
     }),
 
     // WARC source (r16 verdict #8): every doc wrapped as a real
@@ -181,7 +166,6 @@ object IngestQueries {
           col("warc_type"), col("http_status"),
           length(col("body")).cast("long").as("n_chars"),
           col("body").as("text"))
-        .orderBy(col("doc_id"))
     }),
 
     // First-mile HTTP response gate (r18): response records carry varied
@@ -218,7 +202,6 @@ object IngestQueries {
       graft.sources.WarcSource.responseFilter(parsed)
         .select(substring_index(col("uri"), "/", -1).cast("long").as("doc_id"),
           col("media_type"), length(col("body")).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))
     }),
 
     // X-Robots-Tag opt-out gate (r18 verdict gap #2): the HEADER form of
@@ -270,7 +253,6 @@ object IngestQueries {
         .select(substring_index(col("uri"), "/", -1).cast("long").as("doc_id"),
           (substring_index(col("uri"), "/", -1).cast("long") % 8).as("arm"),
           col("x_robots_tag"))
-        .orderBy(col("doc_id"))
     }))
 
   import OracleDefs.EvtCte

@@ -915,7 +915,6 @@ object LlmQueries {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_kept"), keptStat,
         round(any_value(col("thr")), 6).as("threshold"))
-      .orderBy(col("lang"))
   }
 
   /** Per-language perplexity curation — the CCNet cut over [[graft.llm.LmScore]]'s
@@ -1066,7 +1065,6 @@ object LlmQueries {
     "q_dedup_exact" -> ((s, d) => {
       Dedup.exactSurvivors(docsExactDups(s, d), col("doc_id"), col("text"))
         .select(col("doc_id"), col("dup_cnt"))
-        .orderBy(col("doc_id"))
     }),
 
     // Exact n-gram Jaccard pairs (the LSH-free baseline) — fully
@@ -1075,7 +1073,6 @@ object LlmQueries {
       Dedup.jaccardPairs(docsNearDups(s, d), col("doc_id"), col("text"),
           n = 3, threshold = 0.6)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // MinHash+LSH candidates: k=64 sigs, 16 bands × 4 rows, est-Jaccard ≥ 0.5.
@@ -1085,14 +1082,12 @@ object LlmQueries {
       Dedup.minHashCandidates(docsNearDups(s, d), col("doc_id"), col("text"),
           shingleN = 3, k = 64, bands = 16, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // SimHash pairs at hamming ≤ 3 via 16-bit-chunk banding (rows-only).
     "q_dedup_simhash" -> ((s, d) => {
       Dedup.simHashPairs(docsNearDups(s, d), col("doc_id"), col("text"), maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Deterministic MinHash twin: md5-packed shingle values, integer
@@ -1104,7 +1099,6 @@ object LlmQueries {
       Dedup.minHashDetCandidates(docsNearDups(s, d), col("doc_id"), col("text"),
           shingleN = 3, k = 64, bands = 16, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Deterministic-projection SimHash twin: md5-derived 60-bit fingerprint,
@@ -1115,7 +1109,6 @@ object LlmQueries {
     "q_dedup_simhash_det" -> ((s, d) => {
       Dedup.simHashDetPairs(docsNearDups(s, d), col("doc_id"), col("text"), maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Dedup cluster resolution: connected components over the exact Jaccard
@@ -1126,7 +1119,6 @@ object LlmQueries {
       val pairs = Dedup.jaccardPairs(docsNearDups(s, d), col("doc_id"),
         col("text"), n = 3, threshold = 0.6)
       Dedup.components(pairs, col("id_a"), col("id_b"))
-        .orderBy(col("doc_id"))
     }),
 
     // End-to-end dedup application: corpus minus non-survivors (cluster
@@ -1140,7 +1132,6 @@ object LlmQueries {
       Dedup.dropNearDups(docs, col("doc_id"),
           Dedup.components(pairs, col("id_a"), col("id_b")))
         .select(col("doc_id"))
-        .orderBy(col("doc_id"))
     }),
 
     // PRODUCTION cluster resolution (r15 verdict #1): connected components
@@ -1157,7 +1148,6 @@ object LlmQueries {
       val pairs = Dedup.minHashCandidates(docsNearDups(s, d), col("doc_id"),
         col("text"), shingleN = 3, k = 64, bands = 16, threshold = 0.5)
       Dedup.components(pairs, col("id_a"), col("id_b"))
-        .orderBy(col("doc_id"))
     }),
 
     // End-to-end production dedup at scale: corpus minus the LSH chain's
@@ -1169,7 +1159,6 @@ object LlmQueries {
       Dedup.dropNearDups(docs, col("doc_id"),
           Dedup.components(pairs, col("id_a"), col("id_b")))
         .select(col("doc_id"))
-        .orderBy(col("doc_id"))
     }),
 
     // Full-oracle det twins of the LSH cluster/apply chain: components over
@@ -1181,7 +1170,6 @@ object LlmQueries {
       val pairs = Dedup.minHashDetCandidates(docsNearDups(s, d), col("doc_id"),
         col("text"), shingleN = 3, k = 64, bands = 16, threshold = 0.5)
       Dedup.components(pairs, col("id_a"), col("id_b"))
-        .orderBy(col("doc_id"))
     }),
     "q_dedup_apply_lsh_det" -> ((s, d) => {
       val docs = docsNearDups(s, d)
@@ -1190,7 +1178,6 @@ object LlmQueries {
       Dedup.dropNearDups(docs, col("doc_id"),
           Dedup.components(pairs, col("id_a"), col("id_b")))
         .select(col("doc_id"))
-        .orderBy(col("doc_id"))
     }),
 
     // Benchmark decontamination: the eval-leakage pass. The "benchmark" is a
@@ -1205,7 +1192,6 @@ object LlmQueries {
       Decontamination.contaminationHits(docs, col("doc_id"), col("text"),
           docs.filter(col("doc_id") % 17 === 3), substring(col("text"), 1, 120),
           n = 5, minHits = 2)
-        .orderBy(col("doc_id"))
     }),
     "q_decontam_apply" -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -1230,7 +1216,6 @@ object LlmQueries {
           col("text"),
           docs.filter(col("doc_id") % 17 === 3), substring(col("text"), 1, 120),
           k = FuzzyK, w = WinnowW, minHits = 4)
-        .orderBy(col("doc_id"))
     }),
     "q_decontam_fuzzy_apply" -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -1257,22 +1242,18 @@ object LlmQueries {
             .as("text"))
         .select(col("doc_id"),
           TextAnalysis.redactPii(col("text")).as("redacted"))
-        .orderBy(col("doc_id"))
     }),
 
     // Text analysis battery: every stat is closed-form arithmetic the oracle
     // restates exactly; runs at scan speed (no shuffle, no UDF). Tokenizes
     // ONCE via the staged projection (r3 verdict: the per-stat re-split cost
     // ~12 evaluations of split() per row).
-    // plain orderBy on purpose: DeferProjectPastSort pulls the stats battery
-    // above the sort, so it runs once (no explicit RangeSort needed)
     "q_text_stats" -> ((s, d) => {
       TextAnalysis.withStats(Tables.documents(s, d), col("text"), Stopwords)
         .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
           round(col("avg_tok_len"), 6).as("avg_tok_len"),
           col("stop_cnt"), round(col("quality"), 6).as("quality"),
           col("en_like"), col("subwords"))
-        .orderBy(col("doc_id"))
     }),
 
     // Deterministic train/val/test split: named consecutive scramble-key
@@ -1286,7 +1267,6 @@ object LlmQueries {
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
           max(col("doc_id")).as("max_id"))
-        .orderBy(col("split"))
     }),
 
     // Repetition-ratio quality signal (Gopher-style): max token
@@ -1301,7 +1281,6 @@ object LlmQueries {
           size(TextAnalysis.tokens(col("text"))).as("n_tok"))
         .select(col("doc_id"), col("max_freq"),
           round(col("max_freq").cast("double") / col("n_tok"), 6).as("rep_ratio"))
-        .orderBy(col("doc_id"))
     }),
 
     // Deterministic Bernoulli subsample: scramble-key threshold keep — the
@@ -1312,7 +1291,6 @@ object LlmQueries {
       Tables.documents(s, d)
         .filter(graft.llm.Sampling.bernoulli(col("doc_id"), 0.1))
         .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
     }),
 
     // Corpus summary: the "how big / how clean is my training set" roll-up
@@ -1328,7 +1306,6 @@ object LlmQueries {
       // batch query from the live dashboard silently.
       graft.DocumentsApp.corpusStats(
           graft.DocumentsApp.stampStats(Tables.documents(s, d)))
-        .orderBy(col("lang_pred"))
     }),
 
     // Quantile-based quality curation: the "keep the top quartile" pass —
@@ -1390,11 +1367,6 @@ object LlmQueries {
           element_at(col("fp"), 1).as("fp_min"),
           element_at(col("fp"), -1).as("fp_max"),
           aggregate(col("fp"), lit(0L), (a, x) => a + x).as("fp_sum"))
-        // persist-before-sort (r22): the pushed short-doc filter drags the
-        // normalize below the exchange and the sampler pays it again;
-        // cached rows are 5 scalars. CacheHygiene releases per query.
-        .persist()
-        .orderBy(col("doc_id"))
     }),
 
     // Winnowing near-dup pairs: inverted-index join on shared fingerprints
@@ -1408,7 +1380,6 @@ object LlmQueries {
           k = WinnowK, w = WinnowW, dfCap = 64, threshold = 0.5)
         .select(col("id_a"), col("id_b"), col("shared"),
           round(col("resemblance"), 6).as("resemblance"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // End-to-end winnow dedup: connected components over the winnow pair
@@ -1421,7 +1392,6 @@ object LlmQueries {
       Dedup.dropNearDups(docs, col("doc_id"),
           Dedup.components(pairs, col("id_a"), col("id_b")))
         .select(col("doc_id"))
-        .orderBy(col("doc_id"))
     }),
 
     // Temperature-scaled mixture weights (the Llama/PaLM data-mixing
@@ -1442,7 +1412,6 @@ object LlmQueries {
         .select(col("source"), col("n_docs"), col("w"),
           call_function("div", col("w") * 1000000L, col("tw")).as("p_ppm"),
           call_function("div", col("w") * 1000L, col("tw")).as("quota_1k"))
-        .orderBy(col("source"))
     }),
 
     // Per-source corpus report — the "which sources are garbage" dashboard
@@ -1462,7 +1431,6 @@ object LlmQueries {
           (count(lit(1)) - countDistinct(col("fp"))).as("n_dups"),
           OracleDefs.stableAvg4(avg(col("quality"))).as("avg_quality"),
           OracleDefs.stableAvg4(avg(col("nll_mw"))).as("avg_lm_mw"))
-        .orderBy(col("source"))
     }),
 
     // Paragraph-level exact dedup (the structural pass document-level dedup
@@ -1473,7 +1441,6 @@ object LlmQueries {
     // collapse to its first quoting doc, while base paragraphs pass through.
     "q_dedup_paragraph" -> ((s, d) => {
       Dedup.paragraphSurvivors(docsParagraphs(s, d), col("doc_id"), col("text"))
-        .orderBy(col("doc_id"))
     }),
 
     // Gopher repetition battery (Rae et al. 2021): duplicate-line fraction,
@@ -1496,10 +1463,6 @@ object LlmQueries {
           col("tb.gram").as("top2_gram"),
           round(col("tb.cnt") * length(col("tb.gram")) / length(col("text")), 6)
             .as("top2_frac"))
-        // persist-before-sort (r22): the sampler re-evaluated the spam
-        // fixture + line/bigram battery; cached rows are 7 scalars.
-        .persist()
-        .orderBy(col("doc_id"))
     }),
 
     // Gopher quality-rule battery (Rae et al. 2021 §A1.1): word count,
@@ -1508,13 +1471,6 @@ object LlmQueries {
     // the canonical pre-training heuristic filter. Zero-shuffle per-row
     // projections; the fixture plants one mutant family per line rule.
     "q_gopher_rules" -> ((s, d) => {
-      // PERSISTED before the sort (r22, the q_mm_phash precedent): the
-      // battery itself is already deferred above the exchange by
-      // DeferProjectPastSort, but the ordered dump's boundary sampler
-      // still re-evaluated the FIXTURE (the mutant union arms). The cache
-      // is the battery OUTPUT — doc_id + 7 numeric/bool columns, ~60 B/row
-      // — never the corpus text; sampler and sort read it.
-      // CacheHygiene releases per query.
       TextAnalysis.withGopherSignals(docsGopherFix(s, d), col("text"))
         .select(col("doc_id"), col("n_words"),
           round(col("mean_word_len"), 6).as("mean_word_len"),
@@ -1523,8 +1479,6 @@ object LlmQueries {
           round(col("ellipsis_frac"), 6).as("ellipsis_frac"),
           round(col("alpha_frac"), 6).as("alpha_frac"),
           col("stop_hits"), col("gopher_pass"))
-        .persist()
-        .orderBy(col("doc_id"))
     }),
 
     // Gopher rules keyed by language (r16 verdict #7): stopword list,
@@ -1540,11 +1494,6 @@ object LlmQueries {
           round(col("symbol_ratio"), 6).as("symbol_ratio"),
           round(col("alpha_frac"), 6).as("alpha_frac"),
           col("stop_hits"), col("gopher_pass"))
-        // persist-before-sort (r22, the q_gopher_rules measurement): the
-        // sampler re-evaluated the lang-plant fixture; the cache is the
-        // narrow battery output. CacheHygiene releases per query.
-        .persist()
-        .orderBy(col("doc_id"))
     }),
 
     // C4 line-level cleaning (Raffel et al. 2020 §2.2): keep lines that end
@@ -1552,12 +1501,9 @@ object LlmQueries {
     // javascript; keep docs with ≥3 surviving lines and no lorem-ipsum /
     // code-brace markers. One filter HOF per row — the line rules never
     // explode the corpus.
-    // projectSorted, not orderBy (r19): the line-filter battery is a heavy
-    // narrow projection — orderBy's sampling pass would run it twice
-    "q_c4_clean" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      docsC4Fix(s, d), Seq(col("doc_id"))) { base =>
+    "q_c4_clean" -> ((s, d) => {
       val ls = TextAnalysis.docLines(col("text"))
-      base
+      docsC4Fix(s, d)
         .select(col("doc_id"), col("text"), ls.as("ls"),
           TextAnalysis.c4KeptLines(ls).as("kept"))
         .select(col("doc_id"),
@@ -1581,7 +1527,6 @@ object LlmQueries {
           .select((col("doc_id") + 500000L).as("doc_id"), col("text")))
       val seen = docs.filter(col("doc_id") % 5 === 0)
       Dedup.incrementalNew(batch, seen, col("doc_id"), col("text"))
-        .orderBy(col("doc_id"))
     }),
 
     // Corpus vocabulary profile: global token frequency + document
@@ -1609,7 +1554,6 @@ object LlmQueries {
       graft.llm.Sampling.shardShuffle(
           Tables.documents(s, d).select(col("doc_id")), col("doc_id"),
           nShards = 8)
-        .orderBy(col("shard"), col("pos"))
     }),
 
     // Real language ID: char-trigram Naive Bayes (LangId) — integer scores
@@ -1630,7 +1574,6 @@ object LlmQueries {
           // confidence: best − second-best (integer, oracle-restated) — the
           // r12-missing signal that lets downstream bin low-margin docs
           graft.llm.LangId.margin(col("sc")).as("margin"))
-        .orderBy(col("doc_id"))
     }),
 
     // Perplexity quality score (the CCNet/KenLM filter): integer NLL under
@@ -1646,7 +1589,6 @@ object LlmQueries {
           graft.llm.LangId.nWindows(p).as("n_win"))
         .select(col("doc_id"), col("nll"), col("n_win"),
           graft.llm.LmScore.nllPerWindow(col("nll"), col("n_win")).as("nll_mw"))
-        .orderBy(col("doc_id"))
     }),
 
     // Sequence packing: greedy next-fit token-budget packs per shard (the
@@ -1660,7 +1602,6 @@ object LlmQueries {
       graft.llm.Packing.packNextFit(docs, col("doc_id"),
           pmod(col("doc_id"), lit(8)), col("doc_id"), col("n_tok"),
           maxTokens = 512L)
-        .orderBy(col("doc_id"))
     }),
 
     // BPE merge TRAINING (Sennrich et al. 2016): the first 4 merges
@@ -1672,7 +1613,6 @@ object LlmQueries {
     "q_bpe_train" -> ((s, d) => {
       graft.llm.Bpe.trainMerges(Tables.documents(s, d), col("text"),
           rounds = BpeTrainRounds)
-        .orderBy(col("merge_rank"))
     }),
 
     // BATCHED BPE training at a real vocabulary scale (r18 verdict #6):
@@ -1688,7 +1628,6 @@ object LlmQueries {
     "q_bpe_train_batched" -> ((s, d) => {
       graft.llm.Bpe.trainMergesBatched(Tables.documents(s, d), col("text"),
           rounds = BpeBatchRounds, batch = BpeBatchK)
-        .orderBy(col("merge_rank"))
     }),
 
     // Bounded deterministic training SAMPLE (the other half of r18
@@ -1702,7 +1641,6 @@ object LlmQueries {
           Tables.documents(s, d)
             .filter(col("doc_id") % 7 === 0 && col("doc_id") < 7 * 4096),
           col("text"), rounds = BpeBatchRounds, batch = BpeBatchK)
-        .orderBy(col("merge_rank"))
     }),
 
     // Train→tokenize loop closure: the 4 learned merges re-segment every
@@ -1719,7 +1657,6 @@ object LlmQueries {
         .select(col("doc_id"),
           size(col("__tk")).cast("long").as("n_tok"),
           graft.llm.Bpe.learnedSubwordCount(col("__tk"), merges).as("n_sub"))
-        .orderBy(col("doc_id"))
     }),
 
     // Tokenize-to-ids (r16 verdict #5 — the write-path last mile): the
@@ -1738,18 +1675,11 @@ object LlmQueries {
         .orderBy(col("merge_rank")).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       val vocab = graft.llm.Bpe.idVocab(docs, col("text"), merges)
-      // PERSISTED before the sort (r22, the q_mm_phash precedent): the
-      // learned_bpe_ids walk + posexplode sit below the ordered dump's
-      // range exchange, so the boundary sampler re-ran the whole BPE
-      // segmentation per doc a second time; the cached relation is
-      // (doc_id, pos, id) — 24 B/row. CacheHygiene releases per query.
       docs
         .select(col("doc_id"),
           posexplode(graft.llm.Bpe.tokenizeIds(TextAnalysis.tokens(col("text")),
             merges, vocab)).as(Seq("pos", "id")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("id"))
-        .persist()
-        .orderBy(col("doc_id"), col("pos"))
     }),
 
     // Overlapping context-window chunking (size 32, overlap 8): the
@@ -1760,7 +1690,6 @@ object LlmQueries {
     "q_chunk_overlap" -> ((s, d) => {
       graft.llm.Packing.chunkTokens(Tables.documents(s, d),
           col("doc_id"), col("text"), size = 32, overlap = 8)
-        .orderBy(col("doc_id"), col("chunk_idx"))
     }),
 
     // End-to-end C4-style cleaning: quality + language filter, THEN near-dup
@@ -1791,7 +1720,6 @@ object LlmQueries {
       Dedup.dropNearDups(kept, col("doc_id"),
           Dedup.components(pairs, col("id_a"), col("id_b")))
         .select(col("doc_id"), round(col("quality"), 6).as("quality"))
-        .orderBy(col("doc_id"))
     }),
 
     // The modern ingest-cleaning order as ONE fully-oracle-checked chain:
@@ -1812,7 +1740,6 @@ object LlmQueries {
         .withColumn("n_tokens", size(split(col("ntext"), " ")).cast("long"))
         .filter(col("n_tokens") >= 10)
         .select(col("doc_id"), col("dup_cnt"), col("n_tokens"))
-        .orderBy(col("doc_id"))
     }),
 
     // Mixture capping: at most k docs per domain by deterministic
@@ -1822,7 +1749,6 @@ object LlmQueries {
           Tables.documents(s, d)
             .select(pmod(col("doc_id"), lit(7)).as("domain"), col("doc_id")),
           col("domain"), col("doc_id"), k = 20)
-        .orderBy(col("domain"), col("doc_id"))
     }),
 
     // Weighted mixture resample: three sources at 50/30/20% of a 40-doc
@@ -1833,7 +1759,6 @@ object LlmQueries {
           Tables.documents(s, d).select(col("source"), col("doc_id")),
           col("source"), col("doc_id"),
           Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2), total = 40)
-        .orderBy(col("source"), col("doc_id"))
     }),
 
     // Brute-force cosine top-k: a FIXED 50-probe workload (stride + cap —
@@ -1847,7 +1772,6 @@ object LlmQueries {
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 5000), k = 5)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // LSH-bucketed ANN (12-bit random-hyperplane buckets): the scale path.
@@ -1858,7 +1782,6 @@ object LlmQueries {
       Similarity.lshTopK(emb, emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 5000), k = 5, nBits = 12)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // Multi-probe LSH: each probe also searches its bucket's hamming-1
@@ -1873,7 +1796,6 @@ object LlmQueries {
           k = 5, nBits = 12)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // Product-quantization ANN: m=4 subspaces over dim 64, codewords from a
@@ -1891,7 +1813,6 @@ object LlmQueries {
           dim = 64, m = 4, topK = 5)
         .select(col("pid"), col("nid"), col("adist"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // IVF-PQ: the classic billion-vector composition — coarse integer-L2
@@ -1907,7 +1828,6 @@ object LlmQueries {
           dim = 64, m = 4, topK = 5, nprobe = 3)
         .select(col("pid"), col("nid"), col("adist"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // IVF-PQ + exact re-rank: the ADC shortlist (refine×topK = 20/probe) is
@@ -1923,7 +1843,6 @@ object LlmQueries {
           dim = 64, m = 4, topK = 5, nprobe = 3, refine = 4)
         .select(col("pid"), col("nid"), col("dist"), col("adist"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // LSH with nBits = 0: one bucket holds everything, so the bucketed join +
@@ -1935,7 +1854,6 @@ object LlmQueries {
       Similarity.lshTopK(emb, emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 5000), k = 5, nBits = 0)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // IVF ANN: deterministic coarse quantizer (capped corpus stride —
@@ -1951,7 +1869,6 @@ object LlmQueries {
             col("vec_id") < 1616), k = 5, nprobe = 3)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // IVF with the LEARNED quantizer: two spherical-Lloyd rounds refine the
@@ -1968,7 +1885,6 @@ object LlmQueries {
           k = 5, nprobe = 3)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // Deterministic integer-Lloyd twin: the learned-quantizer plumbing
@@ -1985,7 +1901,6 @@ object LlmQueries {
           iters = 2)
         .select(col("cell"), posexplode(col("cvec")).as(Seq("pos", "c")))
         .select(col("cell"), col("pos").cast("long").as("pos"), col("c"))
-        .orderBy(col("cell"), col("pos"))
     }),
 
     // IVF probing ALL cells: every corpus row meets every probe exactly once
@@ -2001,7 +1916,6 @@ object LlmQueries {
           nprobe = Int.MaxValue)
         .select(col("pid"), col("nid"), round(col("score"), 6).as("score"),
           col("rank").cast("long").as("rank"))
-        .orderBy(col("pid"), col("rank"))
     }),
 
     // Embedding-cosine near-dup: LSH bucket candidates + exact cosine. The
@@ -2013,7 +1927,6 @@ object LlmQueries {
           threshold = 0.999, nBits = 12)
         .filter(col("id_b") === col("id_a") + 200000L)
         .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-        .orderBy(col("id_a"))
     }),
 
     // SemDeDup (Abbas et al. 2023): cluster the NORMALIZED embeddings
@@ -2044,7 +1957,6 @@ object LlmQueries {
             .filter(col("vec_id") % 101 === 0 && col("vec_id") < 101 * 64),
           tau = 0.999, nBits = 0, anchorCap = 64)
         .select(col("vec_id"))
-        .orderBy(col("vec_id"))
     }),
 
     // The paper's literal form — anchorCap=0, pure within-cluster
@@ -2057,7 +1969,6 @@ object LlmQueries {
             .filter(col("vec_id") % 101 === 0 && col("vec_id") < 101 * 64),
           tau = 0.999, nBits = 0)
         .select(col("vec_id"))
-        .orderBy(col("vec_id"))
     }),
 
     // Multimodal: metadata-only filter — the blob column is never read
@@ -2070,7 +1981,6 @@ object LlmQueries {
           col("meta.width").cast("long").as("width"),
           col("meta.height").cast("long").as("height"),
           col("meta.n_frames").cast("long").as("n_frames"))
-        .orderBy(col("doc_id"))
     }),
 
     // Multimodal resize: aspect-preserving fit into 224×224 — the metadata
@@ -2079,7 +1989,6 @@ object LlmQueries {
       Multimodal.resizeMeta(
           Multimodal.asMedia(Tables.documents(s, d), col("doc_id"), col("text")),
           targetW = 224, targetH = 224)
-        .orderBy(col("doc_id"))
     }),
 
     // Multimodal frame sampling: every 7th frame index per doc — pure
@@ -2089,7 +1998,6 @@ object LlmQueries {
           Multimodal.asMedia(Tables.documents(s, d), col("doc_id"), col("text")),
           everyK = 7)
         .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-        .orderBy(col("doc_id"), col("frame_idx"))
     }),
 
     // Real media decode: binary PPM payloads built from the text, parsed by
@@ -2101,7 +2009,6 @@ object LlmQueries {
     "q_mm_decode" -> ((s, d) => {
       Multimodal.decodePpm(
           Multimodal.asPpm(Tables.documents(s, d), col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))
     }),
 
     // Real audio decode: RIFF/WAVE (PCM-8) payloads built from the text
@@ -2111,7 +2018,6 @@ object LlmQueries {
     "q_mm_decode_wav" -> ((s, d) => {
       Multimodal.decodeWav(
           Multimodal.asWav(Tables.documents(s, d), col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))
     }),
 
     // PNG decode: construct REAL zlib-compressed grayscale PNGs from the
@@ -2122,7 +2028,6 @@ object LlmQueries {
     "q_mm_decode_png" -> ((s, d) => {
       Multimodal.decodePng(
           Multimodal.asPng(Tables.documents(s, d), col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))
     }),
 
     // Generic decode dispatch: a mixed corpus (ppm / wav / png /
@@ -2134,7 +2039,6 @@ object LlmQueries {
       Multimodal.decodeMedia(
           Multimodal.asMixedMedia(Tables.documents(s, d), col("doc_id"),
             col("text")))
-        .orderBy(col("doc_id"))
     }),
 
     // Perceptual image hash (r17 verdict #5; r19 mixed-format; r20 color):
@@ -2149,16 +2053,7 @@ object LlmQueries {
     // plant's hash EQUALS its original's: PPM re-encode/2× resize, PNG
     // refilter, JPEG requantization, color JPEG chroma alteration — none
     // may move the fingerprint.
-    "q_mm_phash" -> ((s, d) => {
-      // PERSISTED before the sort (r19): the decode+hash chain is narrow
-      // (no exchange for the range sampler to reuse), so a plain orderBy
-      // re-executes every codec twice; the cached relation is 16 B/row.
-      // RangeSort.projectSorted doesn't fit here — the fixture arms bake
-      // their final doc_ids inside the encode union, so no cheap pre-sort
-      // key relation exists. CacheHygiene releases the cache per query.
-      Multimodal.dHashMedia(mediaPhashFix(s, d)).persist()
-        .orderBy(col("doc_id"))
-    }),
+    "q_mm_phash" -> ((s, d) => Multimodal.dHashMedia(mediaPhashFix(s, d))),
 
     // Image near-dup pairs: hamming ≤ 3 over the dHash via 16-bit-chunk
     // banding (the SimHash discipline, salt guard armed). Plants
@@ -2172,7 +2067,6 @@ object LlmQueries {
     "q_mm_dedup_phash" -> ((s, d) => {
       Multimodal.dHashPairs(Multimodal.dHashMedia(mediaPhashFix(s, d)), maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Image near-dup APPLY — the production form: drop every image within
@@ -2185,7 +2079,6 @@ object LlmQueries {
       Multimodal.dHashDedupApply(Multimodal.dHashMedia(mediaPhashFix(s, d)),
           maxDist = 3)
         .select(col("doc_id"), col("dhash"))
-        .orderBy(col("doc_id"))
     }),
 
     // Audio envelope hash: decode every WAV of the plant fixture through
@@ -2193,15 +2086,7 @@ object LlmQueries {
     // recomputes each BASE hash from the construction arithmetic and
     // asserts the plants (metadata re-encode; polarity inversion) hash
     // IDENTICALLY — both transforms change bytes, neither changes energy.
-    "q_mm_ahash" -> ((s, d) => {
-      // persist-before-sort (r22, the q_mm_phash precedent): the envelope
-      // hash is an opaque mapPartitions decode — DeferProjectPastSort
-      // cannot lift it, so the sampler re-decoded every WAV; the cached
-      // relation is 16 B/row. CacheHygiene releases per query.
-      Multimodal.envelopeHashWav(wavDupFix(s, d))
-        .persist()
-        .orderBy(col("doc_id"))
-    }),
+    "q_mm_ahash" -> ((s, d) => Multimodal.envelopeHashWav(wavDupFix(s, d))),
 
     // Audio near-dup pairs over the envelope hash — the same 16-bit-chunk
     // hamming banding (salt guard armed) the image and SimHash paths run:
@@ -2210,7 +2095,6 @@ object LlmQueries {
       Multimodal.dHashPairs(Multimodal.envelopeHashWav(wavDupFix(s, d)),
           maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // Tokenizer-aware packing: same next-fit fold as q_pack_nextfit, but the
@@ -2227,7 +2111,6 @@ object LlmQueries {
       graft.llm.Packing.packNextFit(sized, col("doc_id"),
           pmod(col("doc_id"), lit(8)), col("doc_id"), col("n_sub"),
           maxTokens = 256L)
-        .orderBy(col("doc_id"))
     }))
 
   /** Shared CTE chain for the langid oracles: the generated integer boost

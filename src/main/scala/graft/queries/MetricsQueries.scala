@@ -43,32 +43,25 @@ object MetricsQueries {
     // A4 — cumulative→delta with counter-reset rule (temporality.go:43-113);
     // semantics pinned by the reference's own test sequences
     // (temporality_test.go:20-95): first point raw, reset → raw, else v−prev.
-    // Series-major output order (= the window's own sort), so the one range
-    // shuffle on the series key serves both the window clustering and the
-    // dump order — no second exchange, no sampling re-execution.
-    "q_a4_cum_to_delta" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), seriesCols, seriesCols ++ orderCols) { b =>
-      Temporality.toDelta(b, seriesCols, orderCols)
-    }.select(col("event_id"), round(col("delta"), 2).as("delta"))),
+    "q_a4_cum_to_delta" -> ((s, d) =>
+      Temporality.toDelta(EventsMetrics.fromEvents(s, d), seriesCols, orderCols)
+        .select(col("event_id"), round(col("delta"), 2).as("delta"))),
 
     // A5 — counter-reset detection counts per series (temporality.go:142-179)
-    "q_a5_reset_count" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), seriesCols) { b =>
-      // window AND the per-series count both cluster on the series key, so
-      // the single range exchange feeds window → agg → ordered dump
-      Temporality.toDelta(b, seriesCols, orderCols)
+    // (the window and the per-series count both cluster on the series key,
+    // so one exchange feeds window → agg)
+    "q_a5_reset_count" -> ((s, d) =>
+      Temporality.toDelta(EventsMetrics.fromEvents(s, d), seriesCols, orderCols)
         .groupBy(col("workspace_id"), col("metric"), col("user_id"))
         .agg(sum(when(col("is_reset"), 1L).otherwise(0L)).as("resets"),
-          count(lit(1)).as("points"))
-    }),
+          count(lit(1)).as("points"))),
 
     // A6/W2 — delta→cumulative running reconstruction (temporality.go:181-236),
     // keyed per series (diverging from the reference's shared-accumulator bug
     // at handler.go:184-197 — documented in Temporality.toCumulative).
-    "q_a6_delta_to_cum" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), seriesCols, seriesCols ++ orderCols) { b =>
-      Temporality.toCumulative(b, seriesCols, orderCols)
-    }.select(col("event_id"), round(col("cum_value"), 2).as("cum_value"))),
+    "q_a6_delta_to_cum" -> ((s, d) =>
+      Temporality.toCumulative(EventsMetrics.fromEvents(s, d), seriesCols, orderCols)
+        .select(col("event_id"), round(col("cum_value"), 2).as("cum_value"))),
 
     // A4 histogram arm — cumulative→delta for count/sum/buckets per series
     // (temporality.go:87-94 guarded subtraction + :115-140 bucket alignment):
@@ -76,10 +69,9 @@ object MetricsQueries {
     // decreased) passes the raw snapshot through; buckets delta at matching
     // bounds. The fixture's pmod sequences hit every arm: first point, reset,
     // prev=0 passthrough, and the normal subtraction.
-    "q_a4_hist_deltas" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), seriesCols, seriesCols ++ orderCols) { b =>
+    "q_a4_hist_deltas" -> ((s, d) => {
       val w = Temporality.seriesWindow(seriesCols, orderCols)
-      val snap = b.select(
+      val snap = EventsMetrics.fromEvents(s, d).select(
         col("workspace_id"), col("metric"), col("user_id"),
         col("ts_ms"), col("event_id"),
         pmod(col("event_id"), lit(97L)).as("ccount"),
@@ -93,30 +85,26 @@ object MetricsQueries {
       val prevBuckets = lag(col("cbuckets"), 1).over(w)
       val reset = coalesce(Temporality.resetFlag(col("ccount"), w), lit(false))
       snap.select(
-          col("workspace_id"), col("metric"), col("user_id"), col("ts_ms"),
-          col("event_id"),
-          reset.as("is_reset"),
-          Temporality.deltaGuarded(col("ccount"), prevCount, reset)
-            .as("count_delta"),
-          round(Temporality.deltaGuarded(col("csum"), prevSum, reset), 2)
-            .as("sum_delta"),
-          aggregate(
-            Temporality.deltaBuckets(col("cbuckets"), prevBuckets, reset),
-            lit(0L), (acc, b) => acc + b.getField("count"))
-            .as("bucket_delta_total"))
-    }.select(col("event_id"), col("is_reset"), col("count_delta"),
-      col("sum_delta"), col("bucket_delta_total"))),
+        col("event_id"),
+        reset.as("is_reset"),
+        Temporality.deltaGuarded(col("ccount"), prevCount, reset)
+          .as("count_delta"),
+        round(Temporality.deltaGuarded(col("csum"), prevSum, reset), 2)
+          .as("sum_delta"),
+        aggregate(
+          Temporality.deltaBuckets(col("cbuckets"), prevBuckets, reset),
+          lit(0L), (acc, b) => acc + b.getField("count"))
+          .as("bucket_delta_total"))
+    }),
 
     // J1/W1 — series-state lookup: previous point per series via lag
     // (temporality.go:11-23,51-61 as-of self-join semantics)
-    "q_j1_lag_lookup" -> ((s, d) => graft.query.RangeSort.projectSorted(
-      EventsMetrics.fromEvents(s, d), seriesCols, seriesCols ++ orderCols) { b =>
+    "q_j1_lag_lookup" -> ((s, d) => {
       val w = Temporality.seriesWindow(seriesCols, orderCols)
-      b.select(col("workspace_id"), col("metric"), col("user_id"), col("ts_ms"),
-        col("event_id"),
+      EventsMetrics.fromEvents(s, d).select(col("event_id"),
         coalesce(lag(col("value"), 1).over(w), lit(-1.0)).as("prev_value"),
         coalesce(col("ts_ms") - lag(col("ts_ms"), 1).over(w), lit(-1L)).as("gap_ms"))
-    }.select(col("event_id"), col("prev_value"), col("gap_ms"))),
+    }),
 
     // A1/W3/ST4 — 1m rollup (schema.sql:146-192): min/max/avg/anyLast/sum/count
     "q_a1_rollup_1m" -> ((s, d) => {
@@ -129,7 +117,6 @@ object MetricsQueries {
           col("value_last"),
           round(col("value_sum"), 2).as("value_sum"),
           col("samples_count"))
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // A2 — 5m rollup over 1m with the faithful avg-of-avgs (schema.sql:262)
@@ -144,7 +131,6 @@ object MetricsQueries {
           col("value_last"),
           round(col("value_sum"), 2).as("value_sum"),
           col("samples_count"))
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // A3 — 1h rollup over 5m (schema.sql:340-374), full cascade
@@ -159,7 +145,6 @@ object MetricsQueries {
           col("value_last"),
           round(col("value_sum"), 2).as("value_sum"),
           col("samples_count"))
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // A1 full-width — the COMPLETE 1m MV column set (schema.sql:146-192):
@@ -178,7 +163,6 @@ object MetricsQueries {
             size(col("exp_negative_buckets")).as("n_exp_neg_entries"),
             aggregate(col("exp_negative_buckets"), lit(0L),
               (acc, b) => acc + b.getField("count")).as("exp_neg_count_total"))): _*)
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // A2 full-width — the COMPLETE 5m MV column set (schema.sql:249-283):
@@ -192,7 +176,6 @@ object MetricsQueries {
         keys, col("ts_ms"), col("event_id"))
       Rollup.rollup5mFull(m1, keys)
         .select(fullRollupOut(Nil): _*)
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // A3 full-width — the COMPLETE 1h MV column set (schema.sql:340-374),
@@ -204,7 +187,6 @@ object MetricsQueries {
         keys, col("ts_ms"), col("event_id"))
       Rollup.rollup1hFull(Rollup.rollup5mFull(m1, keys), keys)
         .select(fullRollupOut(Nil): _*)
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // F9 — series hash determinism: xxhash64 over sorted attribute entries
@@ -234,7 +216,6 @@ object MetricsQueries {
         .select(col("dp.event_id").as("event_id"), col("workspace_id"),
           col("dp.metric").as("metric"), col("service_name"),
           col("dp.ts_ms").as("ts_ms"), col("dp.value").as("value"))
-        .orderBy(col("event_id"))
     }),
 
     // P1 — validation with first-match-wins reject reasons
@@ -257,7 +238,6 @@ object MetricsQueries {
             col("val"), lit(null).cast("long"), lit(null).cast("double"),
             lit(null).cast("array<struct<le:double,count:bigint>>"), NowMs))
         .groupBy(col("reject_reason")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("reject_reason"))
     }),
 
     // P2/P3 — workspace + TTL stamping (processor.go:62,98)
@@ -265,7 +245,6 @@ object MetricsQueries {
       val df = EventsMetrics.fromEvents(s, d).filter(col("event_id") % 100 === 0)
       Validation.stampTtl(Validation.stampWorkspace(df, "ws-override"), lit(NowMs))
         .select(col("event_id"), col("workspace_id"), col("ttl_ms"), col("ts_ms"))
-        .orderBy(col("event_id"))
     }),
 
     // P8 — resolution routing truth table (handler.go:304-321)
@@ -282,7 +261,6 @@ object MetricsQueries {
         (7L, NowMs - h, NowMs))
       cases.toDF("case_id", "start_ms", "end_ms")
         .withColumn("tbl", Promread.selectTable(col("start_ms"), col("end_ms"), NowMs))
-        .orderBy(col("case_id"))
     }),
 
     // P4+P5+P6+P7 — matcher compiler EQ/NEQ/RE/NRE + workspace + projection
@@ -296,7 +274,6 @@ object MetricsQueries {
         workspaceId = "ws-1", startMs = 0, endMs = 0)
       df.filter(pred)
         .select(col("event_id"), col("metric"), col("service_name"), col("user_id"))
-        .orderBy(col("event_id"))
     }),
 
     // The composite promread read path: matchers + range + routing-to-raw +
@@ -355,7 +332,6 @@ object MetricsQueries {
         .select(col("metric"), col("labels"), col("n_samples"),
           col("first_ts_ms"), col("last_ts_ms"),
           col("value_sum").cast("long").as("value_cents_sum"))
-        .orderBy(col("metric"), col("labels"))
     }))
 
   /** DuckDB restatement of rollup1mFull over the withHistogram fixture, with

@@ -4,8 +4,9 @@ package graft.queries
   *
   * The driver compares Spark parquet output against DuckDB running
   * [[graft.SparkEntry.oracleSql]] over the same parquet tables, hashing values
-  * after sorting columns by name — so every query/oracle pair aliases columns
-  * identically and orders rows identically.
+  * after sorting columns by name and sorting rows — so every query/oracle
+  * pair aliases columns identically, and only a LIMIT/top-k ordering (which
+  * picks WHICH rows appear) must match between the two sides.
   */
 object OracleDefs {
 

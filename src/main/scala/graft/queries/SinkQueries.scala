@@ -105,7 +105,6 @@ object SinkQueries {
           round(sum(col("sum")), 2).as("sum"),
           round(histogram_quantile(merged, lit(50.0)), 6).as("p50"),
           round(histogram_quantile(merged, lit(95.0)), 6).as("p95"))
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
       val plan = requireRouted(routed, "metrics_5m", "the routed hist query")
       require(PlanAudit.aggregateFunctions(plan).exists(_.prettyName == "merge_buckets_agg"),
         "bucket merge missing from the routed plan")
@@ -133,7 +132,6 @@ object SinkQueries {
         .filter(MetricsSink.partitionFilter(tier, RtStart, RtEnd))
         .filter(col("bucket_ms").between(RtStart, RtEnd))
         .select(rollupOut: _*)
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // ST8 — raw tier → incremental FULL-width 1m/5m/1h cascade with the
@@ -154,7 +152,6 @@ object SinkQueries {
       MetricsSink.read(s, base, MetricsSink.H1)
         .filter(col("bucket_ms") >= NowMs - RollupMaintenance.freshnessMs("metrics_1m"))
         .select(fullOut: _*)
-        .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
     }),
 
     // P8 as a PLAN rewrite — the MV-routing Catalyst rule (plans/
@@ -192,7 +189,6 @@ object SinkQueries {
             col("value_min"), col("value_max"),
             OracleDefs.stableAvg4(col("avg_raw")).as("value_avg"),
             col("samples_count"))
-          .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
         requireRouted(routed, "metrics_1m", "q_p8_route_mv")
         // the routed read is the measured phase; the write+cascade above is
         // setup (BenchPhases folds this out of the builder time for BENCH)
@@ -286,7 +282,6 @@ object SinkQueries {
           round(HistogramFunctions.exp_histogram_quantile(col("m.scale"),
             col("m.zeroCount"), col("m.positive"), col("m.negative"),
             lit(99.0)), 6).as("p99"))
-        .orderBy(col("workspace_id"), col("metric"))
     }))
 
   /** The promread histogram case against STORED coarse tiers: build the full
@@ -331,7 +326,6 @@ object SinkQueries {
         round(element_at(col("qs"), 1), 6).as("p50"),
         round(element_at(col("qs"), 2), 6).as("p90"),
         round(element_at(col("qs"), 3), 6).as("p99"))
-      .orderBy(col("workspace_id"), col("metric"))
   }
 
   // q_read_path_5m_hist's promread window: 2024-01-04 → 2024-01-07 UTC.

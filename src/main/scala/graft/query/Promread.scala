@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * predicates, which is the same thing one level earlier: Catalyst pushes the
   * compiled predicates into the parquet scan (PushedFilters), prunes columns
   * to the projection list, and pushes the LIMIT. Nothing here shuffles except
-  * the final ORDER BY (a range-partitioned sort) and the optional per-series
-  * regroup.
+  * the optional per-series regroup: the final ORDER BY + LIMIT plans as a
+  * top-k (`TakeOrderedAndProject`), not a global sort.
   */
 object Promread {
 
@@ -59,31 +59,37 @@ object Promread {
       .foldLeft(base && afterStart && beforeEnd)(_ && _)
   }
 
-  /** P8 — resolution routing: pick the physical table by query age and span
-    * (handler.go:304-321). Thresholds exact: raw if age<3h ∧ span<1h; 1m if
-    * age<15d ∧ span<24h; 5m if age<63d ∧ span<7d; else 1h. Age/span from
-    * ms-epoch params; start=end=0 short-circuits to raw. Semantically this is
-    * a materialized-view rewrite done at the app level (SURVEY §4). */
+  /** P8 — resolution routing table (handler.go:304-321), finest tier first:
+    * (tier, maxAgeMs, maxSpanMs). A query goes to the first tier whose age
+    * AND span it is strictly under — raw if age<3h ∧ span<1h; 1m if
+    * age<15d ∧ span<24h; 5m if age<63d ∧ span<7d — and to [[CoarsestTier]]
+    * otherwise. */
+  val Routes: Seq[(String, Long, Long)] = {
+    val h = 3600L * 1000; val d = 24 * h
+    Seq(("metrics_raw", 3 * h, 1 * h),
+      ("metrics_1m", 15 * d, 24 * h),
+      ("metrics_5m", 63 * d, 7 * d))
+  }
+  val CoarsestTier = "metrics_1h"
+
+  /** P8 — pick the physical table by query age and span over [[Routes]].
+    * Age/span from ms-epoch params; start=end=0 short-circuits to raw.
+    * Semantically this is a materialized-view rewrite done at the app level
+    * (SURVEY §4). */
   def selectTable(startMs: Column, endMs: Column, nowMs: Long): Column = {
-    val h = 3600L * 1000
-    val d = 24 * h
     val span = endMs - startMs
     val age = lit(nowMs) - startMs
-    when(startMs === 0 && endMs === 0, "metrics_raw")
-      .when(age < 3 * h && span < 1 * h, "metrics_raw")
-      .when(age < 15 * d && span < 24 * h, "metrics_1m")
-      .when(age < 63 * d && span < 7 * d, "metrics_5m")
-      .otherwise("metrics_1h")
+    Routes.foldLeft(when(startMs === 0 && endMs === 0, "metrics_raw")) {
+      case (acc, (tier, maxAge, maxSpan)) => acc.when(age < maxAge && span < maxSpan, tier)
+    }.otherwise(CoarsestTier)
   }
 
-  def selectTable(startMs: Long, endMs: Long, nowMs: Long): String = {
-    val h = 3600L * 1000; val d = 24 * h
+  def selectTable(startMs: Long, endMs: Long, nowMs: Long): String =
     if (startMs == 0 && endMs == 0) "metrics_raw"
-    else if (nowMs - startMs < 3 * h && endMs - startMs < 1 * h) "metrics_raw"
-    else if (nowMs - startMs < 15 * d && endMs - startMs < 24 * h) "metrics_1m"
-    else if (nowMs - startMs < 63 * d && endMs - startMs < 7 * d) "metrics_5m"
-    else "metrics_1h"
-  }
+    else Routes.collectFirst {
+      case (tier, maxAge, maxSpan)
+          if nowMs - startMs < maxAge && endMs - startMs < maxSpan => tier
+    }.getOrElse(CoarsestTier)
 
   /** A13 — sample value per row: gauges/sums carry `value`; histograms expose
     * sum/count (avg) when count > 0 (handler.go:179-205). Rows matching

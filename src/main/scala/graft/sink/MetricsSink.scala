@@ -106,16 +106,17 @@ object MetricsSink {
     spark.read.parquet(s"$baseDir/${tier.name}")
 
   /** Read-side twin of [[partitionValue]]: map a ms-epoch range onto the
-    * partition values it can touch. String comparison is safe — values are
-    * zero-padded and lexicographically ordered — and Catalyst turns this into
-    * directory pruning before a single row is read. */
-  def partitionFilter(tier: Tier, startMs: Long, endMs: Long): Column =
-    col(PartitionCol) >= fmt(tier, startMs) && col(PartitionCol) <= fmt(tier, endMs)
-
-  /** Lower-bound-only prune — the shape of the reference's MV freshness
-    * filters (`timestamp >= now() − window`, schema.sql:183,274,365). */
-  def partitionFilterFrom(tier: Tier, startMs: Long): Column =
-    col(PartitionCol) >= fmt(tier, startMs)
+    * partition values it can touch. A bound of 0 is unbounded, the promread
+    * convention (handler.go:233-241), so `endMs = 0` is the lower-bound-only
+    * prune of the reference's MV freshness filters (`timestamp >= now() −
+    * window`, schema.sql:183,274,365). String comparison is safe — values
+    * are zero-padded and lexicographically ordered — and Catalyst turns this
+    * into directory pruning before a single row is read. */
+  def partitionFilter(tier: Tier, startMs: Long, endMs: Long): Column = {
+    val from = if (startMs > 0) col(PartitionCol) >= fmt(tier, startMs) else lit(true)
+    val to = if (endMs > 0) col(PartitionCol) <= fmt(tier, endMs) else lit(true)
+    from && to
+  }
 
   private[sink] def fmt(tier: Tier, tsMs: Long): String = {
     val p = if (tier.monthly) "yyyyMM" else "yyyy-MM-dd"

@@ -74,7 +74,7 @@ object RollupMaintenance {
     if (oldestSourceMs.isEmpty) return // no source data — nothing refreshable
     val startMs = math.max(nowMs - freshnessMs(target.name), oldestSourceMs.get)
     val fresh = MetricsSink.read(spark, baseDir, source)
-      .filter(MetricsSink.partitionFilterFrom(source, startMs))
+      .filter(MetricsSink.partitionFilter(source, startMs, 0L))
       .filter(sourceTsMs >= startMs)
       .drop(MetricsSink.PartitionCol)
     val recomputed = rollup(fresh)

@@ -183,20 +183,27 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
     * the timestamp — the stored-tier read battery's contract
     * (handler.go:179-205 sample arms; 304-321 routing).
     *
-    * A read racing a compaction or cascade swap can plan over a file or tier
+    * A tier that was never written (no directory yet) answers an empty
+    * result, as the reference's pre-created empty tables do; tier
+    * directories are never deleted, so no swap can make one vanish. A read
+    * racing a compaction or cascade swap can plan over a file or partition
     * directory that is gone by the time it is scanned; it is retried once
     * from a fresh listing, and a second such failure surfaces as-is (503,
-    * [[RemoteReadServer.errorStatus]]) — as does a read before the tier's
-    * first write. */
-  def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] =
-    RemoteReadServer.retryStorageRace(readOnce(q, limit))
-
-  private def readOnce(q: PromProto.Query, limit: Int): Seq[PromProto.TimeSeries] = {
-    import Promread._
+    * [[RemoteReadServer.errorStatus]]) — as does a read of a tier directory
+    * whose first write has not committed a file. */
+  def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] = {
     // per-request clock, like the reference handler: a frozen launch-time
     // now would age every routing decision on a long-running server
-    val tierName = selectTable(q.startMs, q.endMs, nowMs())
+    val tierName = Promread.selectTable(q.startMs, q.endMs, nowMs())
     val tier = MetricsSink.tiers.find(_.name == tierName).get
+    val dir = new org.apache.hadoop.fs.Path(s"$storageDir/${tier.name}")
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) Nil
+    else RemoteReadServer.retryStorageRace(readOnce(q, tier, limit))
+  }
+
+  private def readOnce(q: PromProto.Query, tier: MetricsSink.Tier,
+      limit: Int): Seq[PromProto.TimeSeries] = {
+    import Promread._
     val (vCol, tsCol) =
       if (tier == MetricsSink.Raw) (col("value"), col("ts_ms"))
       else (col("value_last"), col("bucket_ms"))
@@ -207,7 +214,10 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
       case 3 => NRE
       case t => throw new IllegalArgumentException(s"unknown matcher type $t")
     }, m.value))
+    // the partition filter prunes date directories outside the window
+    // before any file is opened; the predicate then bounds the rows
     val scanned = MetricsSink.read(spark, storageDir, tier)
+      .filter(MetricsSink.partitionFilter(tier, q.startMs, q.endMs))
       .filter(predicate(matchers, workspaceId, q.startMs, q.endMs, tsMsCol = tsCol))
       .withColumn("labels", labelsKey(col("attributes")))
     // A6 arm (handler.go:183-199): DELTA-temporality sums return cumulative-

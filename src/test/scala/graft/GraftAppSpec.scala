@@ -74,6 +74,37 @@ class GraftAppSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2))
 
+  test("pipeline.properties loads, lists every key, and shows the real defaults") {
+    val file = new java.io.File("pipeline.properties")
+    val lines = scala.io.Source.fromFile(file, "UTF-8").getLines().toSeq
+    val Setting = """^#?\s*([a-z_]+\.[a-z_.]+)=.*$""".r
+    val keys = lines.collect { case Setting(k) => k }
+    assert(keys.sorted === Seq("checkpoint.dir", "maintenance.compact_max_files",
+      "maintenance.merge_tier_buckets", "maintenance.publish_routing",
+      "maintenance.retention_drop", "maintenance.rollup_every_batches",
+      "processor.convert_to_delta", "processor.enable_exemplars",
+      "processor.flush_interval_ms", "processor.max_exemplars_per_metric",
+      "processor.state_ttl_ms", "processor.workspace_id",
+      "source.archive_dir", "source.clean", "source.dir",
+      "source.max_files_per_trigger", "storage.dir", "transport.grpc_port",
+      "transport.port", "transport.query_timeout_ms"))
+    // as shipped: the required dirs plus the example's maintenance settings
+    val required = GraftConfig("/tmp/graft/in", "/tmp/graft/store", "/tmp/graft/ckpt")
+    val shipped = required.copy(rollupEveryBatches = 1, retentionDrop = true,
+      compactMaxFiles = 8)
+    assert(GraftApp.load(file.getPath) === shipped)
+    // every commented-out value is the default, except the keys that are
+    // off when unset
+    val uncommented = Files.createTempFile("pipeline", ".properties")
+    Files.write(uncommented, lines.map {
+      case l @ Setting(_) => l.stripPrefix("#").trim
+      case l => l
+    }.mkString("\n").getBytes("UTF-8"))
+    assert(GraftApp.load(uncommented.toString) === shipped.copy(
+      transportPort = Some(9201), grpcPort = Some(9202),
+      sourceArchiveDir = Some("/tmp/graft/archive")))
+  }
+
   test("end-to-end: reference sequence [100,150,200] lands as deltas [100,50,50]") {
     val base = Files.createTempDirectory("graft_app").toString
     new java.io.File(s"${base}/in").mkdirs()

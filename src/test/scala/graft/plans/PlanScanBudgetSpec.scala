@@ -55,10 +55,11 @@ class PlanScanBudgetSpec extends SparkSpec {
     // MIXED perceptual-hash fixture (r19): the 3 PPM branches (base +
     // re-encode + 2×-resize) + PNG base + SUB-filtered PNG plant + JPEG
     // base + requantized JPEG plant — 7 pruned construction scans, one
-    // per union arm; every downstream consumer reads the persisted
-    // (doc_id, dhash) relation, so the pair and apply forms cost the
-    // same seven (decode runs exactly once)
-    "q_mm_phash" -> 7,
+    // per union arm — plus r20's color JPEG, chroma-altered and
+    // progressive plants: 10 arms, which q_mm_phash reads directly. The
+    // pair and apply forms read their own persisted (doc_id, dhash)
+    // relation, whose fill this audit does not see, and stay at 7
+    "q_mm_phash" -> 10,
     "q_mm_dedup_phash" -> 7,
     "q_mm_dedup_phash_apply" -> 7,
     // WAV perceptual fixture: base + re-encode + polarity-invert branches
@@ -190,6 +191,16 @@ class PlanScanBudgetSpec extends SparkSpec {
     // aggregate on doc_id joined once per side (nf_a, nf_b)
     "q_dedup_winnow" -> 2)
 
+  // benched query → why its result order is part of its contract. Only
+  // these may plan a global sort: the correctness compare sorts rows before
+  // hashing, so any other global orderBy is a presentation sort that pays a
+  // range shuffle plus a boundary-sampling pass over its whole input. A
+  // top-k (orderBy + limit) plans as TakeOrderedAndProject and needs no
+  // entry.
+  private val orderContracts: Map[String, String] = Map(
+    "q_o5_group_topk" -> ("O5 is the operator under test: the " +
+      "reference's top-metrics query orders by count DESC (Makefile:103)"))
+
   // verify-only queries are still EXECUTED by Verify every round — a scan
   // regression there costs correctness-gate wall-clock even though it never
   // touches the bench signal, so they get budgets too (r16 ADVICE: moving
@@ -200,14 +211,14 @@ class PlanScanBudgetSpec extends SparkSpec {
   test("every budget entry names a registered query (no dead entries)") {
     // a budget key that outlives its query is silently unaudited while
     // still reading as covered (r16 ADVICE) — fail fast instead
-    val dead = (budgets.keySet ++ duplicateExchangesAllowed.keySet) --
-      graft.SparkEntry.queries.keySet
+    val dead = (budgets.keySet ++ duplicateExchangesAllowed.keySet ++
+      orderContracts.keySet) -- graft.SparkEntry.queries.keySet
     assert(dead.isEmpty, s"budget entries for unregistered queries: $dead")
   }
 
-  // one execution per registered query feeds both audits below:
-  // query → (scan overruns, duplicate-exchange overruns)
-  private lazy val audits: Seq[(Option[String], Option[String])] =
+  // one execution per registered query feeds the three audits below:
+  // query → (scan overruns, duplicate-exchange overruns, sort findings)
+  private lazy val audits: Seq[(Option[String], Option[String], Option[String])] =
     audited.map { name =>
       try {
         val budget = budgets.getOrElse(name, 1)
@@ -218,15 +229,23 @@ class PlanScanBudgetSpec extends SparkSpec {
           else Some(s"$name exceeds budget $budget: " + dup.map {
             case (p, n) => s"${p.split('/').last}x$n"
           }.mkString(", "))
-        val groups =
-          if (graft.SparkEntry.verifyOnly(name)) Nil
-          else PlanAudit.duplicateExchanges(df.queryExecution.executedPlan)
+        val benched = !graft.SparkEntry.verifyOnly(name)
+        val plan = df.queryExecution.executedPlan
+        val groups = if (benched) PlanAudit.duplicateExchanges(plan) else Nil
         val allowed = duplicateExchangesAllowed.getOrElse(name, 0)
         val exchanges =
           if (groups.size <= allowed) None
           else Some(s"$name shuffles the same data twice in ${groups.size} " +
             s"exchange groups (allowed $allowed): " + groups.mkString(" | "))
-        (scans, exchanges)
+        val sorts = if (benched) PlanAudit.globalSorts(plan) else Nil
+        val sortFinding = (sorts.nonEmpty, orderContracts.contains(name)) match {
+          case (true, false) => Some(s"$name plans a global sort without an " +
+            "order contract: " + sorts.mkString(" | "))
+          case (false, true) => Some(s"$name has an order contract but " +
+            "plans no global sort (stale entry)")
+          case _ => None
+        }
+        (scans, exchanges, sortFinding)
       } finally graft.CacheHygiene.releaseAll(spark)
     }
 
@@ -237,6 +256,11 @@ class PlanScanBudgetSpec extends SparkSpec {
 
   test("no benched query shuffles the same data twice") {
     val over = audits.flatMap(_._2)
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("no benched query plans a global sort outside its order contract") {
+    val over = audits.flatMap(_._3)
     assert(over.isEmpty, over.mkString("; "))
   }
 }

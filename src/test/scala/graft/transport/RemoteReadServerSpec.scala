@@ -498,18 +498,49 @@ class RemoteReadServerSpec extends SparkSpec {
     assert(errorStatus(new RemoteReadServer.QueryTimeout(1L)) === 503)
     assert(errorStatus(new RemoteReadServer.BodyTooLarge(1)) === 413)
 
-    // over HTTP: a store whose tiers are gone fails both attempts → 503
+    // over HTTP: a tier that was never written answers one empty result,
+    // as the reference's pre-created empty table does — no race, no retry
     val src = Files.createTempDirectory("graft_transport_src").toString
     val empty = new RemoteReadServer(spark,
       Files.createTempDirectory("graft_empty_store").toString, src, "ws-1", NowA)
     val port = empty.start()
     try {
-      val (code, msg) = post(port, "/api/v1/read", Snappy.compress(
+      val (code, body) = post(port, "/api/v1/read", Snappy.compress(
         PromProto.encodeReadRequest(Seq(PromProto.Query(NowA - 60000L, NowA,
           Seq(PromProto.LabelMatcher(0, "__name__", "evt_a")))))))
-      assert(code === 503, new String(msg, "UTF-8"))
-      assert(new String(msg, "UTF-8").contains("PATH_NOT_FOUND"))
+      assert(code === 200, new String(body, "UTF-8"))
+      assert(PromProto.decodeReadResponse(Snappy.uncompress(body)) === Seq(Nil))
     } finally empty.stop()
+  }
+
+  test("a windowed read never opens a date partition outside its window") {
+    // raw tier: an old valid partition (it sorts first, so schema inference
+    // reads it), a corrupt one, and the window's own partition
+    val b = Files.createTempDirectory("graft_transport_prune").toString
+    val day = 24 * 3600 * 1000L
+    val rows = EventsMetrics.withAttributes(EventsMetrics.fromEvents(spark, Sf))
+      .limit(4)
+      .select(lit("ws-p").as("workspace_id"), col("metric"), col("attributes"),
+        col("value"), lit(null).cast("long").as("count"),
+        lit(null).cast("double").as("sum"))
+    Seq(NowA - 60 * day, NowA - 10 * 60000L).foreach { ts =>
+      MetricsSink.write(rows.withColumn("ts_ms", lit(ts)), b, MetricsSink.Raw,
+        col("ts_ms"), keys)
+    }
+    val corrupt = new java.io.File(b,
+      s"${MetricsSink.Raw.name}/${MetricsSink.PartitionCol}=2023-12-01/part-0.parquet")
+    corrupt.getParentFile.mkdirs()
+    Files.write(corrupt.toPath, "not a parquet file".getBytes("UTF-8"))
+    val src = Files.createTempDirectory("graft_transport_src").toString
+    val srv = new RemoteReadServer(spark, b, src, "ws-p", NowA)
+    val windowed = PromProto.Query(NowA - 30 * 60000L, NowA,
+      Seq(PromProto.LabelMatcher(2, "__name__", ".*")))
+    assert(Promread.selectTable(windowed.startMs, windowed.endMs, NowA) ===
+      MetricsSink.Raw.name)
+    assert(srv.query(windowed).flatMap(_.samples).map(_._2).distinct ===
+      Seq(NowA - 10 * 60000L))
+    // positive control: an unbounded read does open the corrupt file
+    intercept[Exception](srv.query(windowed.copy(startMs = 0L, endMs = 0L)))
   }
 
   test("a storage race is retried once, from scratch") {
