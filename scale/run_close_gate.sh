@@ -12,6 +12,8 @@ R=${1:?usage: scale/run_close_gate.sh <round-tag> (e.g. r23)}
 set -x
 cd "$(dirname "$0")/.."
 RC_ALL=0
+# a re-run with the same tag starts a fresh status file
+: > /tmp/${R}c_status.log
 step() { echo "STEP_$1_RC=$2" >> /tmp/${R}c_status.log; [ "$2" -ne 0 ] && RC_ALL=1; }
 
 sbt -batch test > /tmp/${R}c_test.log 2>&1; step TEST $?
@@ -31,9 +33,11 @@ grep '"metric":"total"' /tmp/${R}c_bench.log | tail -1 > scale/bench_sf0.1_${R}_
 # from a prior round and still print "gate clean" — fail the step instead
 cp scale/bench_detail_sf0.1.json scale/bench_detail_sf0.1_${R}_close.json; step DETAIL1X $?
 
-sbt -batch "runMain graft.ScaleGen" > /tmp/${R}c_scalegen.log 2>&1; step SCALEGEN $?
+# the replica lives in this checkout (basename scale10x, so Bench's detail
+# file keeps its name), never in another checkout's tree
+sbt -batch "runMain graft.ScaleGen /root/testdata/sf0.1 $PWD/scale10x" > /tmp/${R}c_scalegen.log 2>&1; step SCALEGEN $?
 rm -f scale/bench_detail_scale10x.json
-SPARK_GRAFT_SF_DIR=/root/repo/scale10x SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench" > /tmp/${R}c_bench10x.log 2>&1; step BENCH10X $?
+SPARK_GRAFT_SF_DIR=$PWD/scale10x SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench" > /tmp/${R}c_bench10x.log 2>&1; step BENCH10X $?
 grep '"metric":"total"' /tmp/${R}c_bench10x.log | tail -1 > scale/bench_10x_${R}_close.json
 cp scale/bench_detail_scale10x.json scale/bench_detail_10x_${R}_close.json; step DETAIL10X $?
 

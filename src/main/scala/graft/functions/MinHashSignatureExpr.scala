@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 /** Native MinHash signature: sig[s] = min over shingle hashes h of
   * xxhash64(h, seed = s), for s in [0, k).
   *
-  * This is the codegen'd replacement for the higher-order-function
-  * formulation in [[graft.llm.Dedup.minHashSignature]]: Catalyst evaluates
+  * This is the codegen'd replacement for a higher-order-function
+  * formulation (one `aggregate` fold with a k-wide `zip_with` step): Catalyst evaluates
   * lambda functions interpretively (HOFs have no doGenCode), which put a
   * ~0.5 µs/element floor on the k×|shingles| inner loop — the dominant cost
   * of the MinHash bench query even after the one-pass rewrite. Here the
@@ -21,12 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * WholeStageCodegen alongside the surrounding projection.
   *
   * Preference order per the build brief: built-in functions, then a native
-  * Expression with doGenCode, then (never) a Scala UDF. The HOF form is kept
-  * in Dedup as documentation + differential-test oracle
-  * (MinHashSignatureExprSpec asserts both produce identical candidates'
-  * behavior-relevant property: per-seed minima over the same hash family
-  * differ, so the spec checks the expression against a direct Scala
-  * reimplementation instead).
+  * Expression with doGenCode, then (never) a Scala UDF. MinHashSignatureExprSpec
+  * checks the expression against a direct Scala reimplementation.
   */
 case class MinHashSignatureExpr(child: Expression, k: Int)
     extends UnaryExpression {

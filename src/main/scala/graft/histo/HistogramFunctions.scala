@@ -1,6 +1,6 @@
 package graft.histo
 
-import graft.model.{Bucket, ExpBucket}
+import graft.model.Bucket
 import org.apache.spark.sql.{Column, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -51,21 +51,10 @@ object HistogramFunctions {
     graft.functions.HistogramExprs.buckets_to_cumulative(buckets)
 
   /** Cumulative→delta adjacent difference over one bucket vector. */
-  val bucketsToDeltaUdf =
-    udf { (rows: Seq[Row]) => HistogramMath.cumulativeToDelta(rowsToBuckets(rows)) }
-
   def buckets_to_delta(buckets: Column): Column =
     graft.functions.HistogramExprs.buckets_to_delta(buckets)
 
   /** exp_histogram_quantile(scale, zero_count, pos, neg, p) → value or NULL. */
-  val expQuantileUdf =
-    udf { (scale: Int, zeroCount: Long, pos: Seq[Row], neg: Seq[Row], p: Double) =>
-      def conv(rows: Seq[Row]): Seq[ExpBucket] =
-        if (rows == null) Nil
-        else rows.filter(_ != null).map(r => ExpBucket(r.getInt(0), r.getLong(1)))
-      HistogramMath.expPercentile(scale, zeroCount, conv(pos), conv(neg), p).toOption
-    }
-
   def exp_histogram_quantile(scale: Column, zeroCount: Column, pos: Column,
       neg: Column, p: Column): Column =
     graft.functions.HistogramExprs.exp_histogram_quantile(scale, zeroCount, pos, neg, p)

@@ -110,8 +110,6 @@ object OtlpJson {
   private def nsToMs(timeUnixNano: Column): Column =
     (timeUnixNano.cast(DecimalType(20, 0)) / lit(1000000)).cast("long")
 
-  private val dpSchema = graft.streaming.OtlpSource.datapointType
-
   /** Wire exemplars → engine exemplar structs (otlp.go:298-330): hex IDs
     * verbatim, value from the int/double oneof (absent → 0.0, the reference's
     * non-pointer float64 zero), ns timestamp → TimestampType, filtered
@@ -128,7 +126,8 @@ object OtlpJson {
         timestamp_millis(nsToMs(e.getField("timeUnixNano"))).as("timestamp"),
         attrsToMap(e.getField("filteredAttributes")).as("attributes"))))
 
-  /** One wire datapoint struct in [[dpSchema]]'s exact field order. */
+  /** One wire datapoint struct in [[graft.streaming.OtlpSource.datapointType]]'s
+    * exact field order. */
   private def dp(metric: Column, kind: String, ts: Column, temp: Column,
       mono: Column, vInt: Column, vDouble: Column, count: Column,
       sum: Column, bounds: Column, counts: Column, attrs: Column,

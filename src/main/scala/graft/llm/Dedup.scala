@@ -186,35 +186,6 @@ object Dedup {
     array_distinct(
       graft.functions.ShingleHashExpr.windows(TextAnalysis.tokens(text), n))
 
-  /** MinHash signature over hashed shingles: signature[i] = min over
-    * shingles of xxhash64(shingleHash, i) — k independent permutations from
-    * seeded 8-byte hashes.
-    *
-    * Shaped as ONE `aggregate` fold over the shingles whose inner k-wide step
-    * touches only lambda-bound values. The shape matters: Catalyst inlines a
-    * single-use projection into its consumer, and interpreted higher-order
-    * lambdas re-evaluate every subexpression per element — so the earlier
-    * `transform(seq(k), i => array_min(transform(sh, …)))` form recomputed
-    * tokenization+shingling k times per row (230 s of a 468 s bench query).
-    * Here the shingle array is the fold input, evaluated once per row, and
-    * the repeated work is k seeded hashes of one long. Deterministic, pure
-    * per-row projection, no shuffle, no fitted state.
-    *
-    * (Kirsch–Mitzenmacher h1+i·h2 double hashing is NOT used: with a shared
-    * low-h1 shingle it wins every position for all i, estimating J≈1 for
-    * dissimilar docs — independence per seed is load-bearing for MinHash.)
-    *
-    * The production pipeline ([[minHashCandidates]]) uses the codegen'd
-    * [[graft.functions.MinHashSignatureExpr]] instead — same fold as a tight
-    * generated loop (interpreted lambdas put a ~0.5 µs/element floor on this
-    * form). This HOF form remains as the readable reference shape. */
-  def minHashSignature(shHashes: Column, k: Int): Column = {
-    val seeds = array((0 until k).map(lit): _*)
-    aggregate(shHashes,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(acc, seeds, (m, i) => least(m, xxhash64(h, i))))
-  }
-
   /** LSH banding: b bands of r rows each (k = b*r); band key = hash of the
     * band's signature slice. Docs sharing any band key are candidates.
     * Native expression ([[graft.functions.BandKeysExpr]]) — the HOF shape

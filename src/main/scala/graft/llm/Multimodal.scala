@@ -3,7 +3,6 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling: image/audio/video as opaque `binary` columns
   * plus a typed metadata struct, with decode/feature-extract implemented as
@@ -30,13 +29,6 @@ import org.apache.spark.sql.types._
   *     shuffle, scales linearly with partitions.
   */
 object Multimodal {
-
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("byte_len", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
 
   /** Wrap a text column as a fake media payload: bytes + typed metadata.
     * Stands in for `spark.read.format("binaryFile")` on real media. */

@@ -2,13 +2,14 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Canonical schemas for the metrics engine.
+/** Canonical codes and nested types for the metrics engine.
   *
   * Mirrors the reference's data model — `models.Metric`
-  * (reference: internal/models/metric.go:26-42) and the `metrics_raw` DDL
-  * (reference: internal/clickhouse/schema.sql:2-73) — re-expressed as idiomatic
+  * (reference: internal/models/metric.go:26-42) — re-expressed as idiomatic
   * Spark nested types: `ArrayType(StructType)` instead of ClickHouse parallel-array
-  * `Nested`, `MapType` for attributes.
+  * `Nested`, `MapType` for attributes. The stored tiers' schemas are not
+  * declared here: each tier's writer records its own
+  * ([[graft.sink.MetricsSink.write]]).
   */
 object Schemas {
 
@@ -33,57 +34,12 @@ object Schemas {
     val Delta: Byte = 2
   }
 
-  val bucketType: StructType = StructType(Seq(
-    StructField("le", DoubleType, nullable = false),
-    StructField("count", LongType, nullable = false)))
-
-  val expBucketType: StructType = StructType(Seq(
-    StructField("index", IntegerType, nullable = false),
-    StructField("count", LongType, nullable = false)))
-
   val exemplarType: StructType = StructType(Seq(
     StructField("spanId", StringType),
     StructField("traceId", StringType),
     StructField("value", DoubleType),
     StructField("timestamp", TimestampType),
     StructField("attributes", MapType(StringType, StringType))))
-
-  /** metrics_raw — one row per OTLP datapoint
-    * (reference: internal/clickhouse/schema.sql:2-73). */
-  val metricsRaw: StructType = StructType(Seq(
-    StructField("workspaceId", StringType, nullable = false),
-    StructField("series_hash", LongType, nullable = false),
-    StructField("metric", StringType, nullable = false),
-    StructField("serviceName", StringType),
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("metric_type", ByteType, nullable = false),
-    StructField("temporality", ByteType, nullable = false),
-    StructField("is_monotonic", BooleanType, nullable = false),
-    StructField("value", DoubleType),
-    StructField("count", LongType),
-    StructField("sum", DoubleType),
-    StructField("buckets", ArrayType(bucketType)),
-    StructField("exp_scale", IntegerType),
-    StructField("exp_zero_count", LongType),
-    StructField("exp_zero_threshold", DoubleType),
-    StructField("exp_positive_buckets", ArrayType(expBucketType)),
-    StructField("exp_negative_buckets", ArrayType(expBucketType)),
-    StructField("attributes", MapType(StringType, StringType)),
-    StructField("exemplars", ArrayType(exemplarType)),
-    StructField("_ttl", TimestampType)))
-
-  /** Rollup tables replace `value` with min/max/avg/last and add samples_count
-    * (reference: internal/clickhouse/schema.sql:102-105,131). */
-  val metricsRollup: StructType = StructType(
-    metricsRaw.fields.flatMap {
-      case StructField("value", _, _, _) => Seq(
-        StructField("value_min", DoubleType),
-        StructField("value_max", DoubleType),
-        StructField("value_avg", DoubleType),
-        StructField("value_last", DoubleType))
-      case f @ StructField("exemplars", _, _, _) => Seq.empty // not rolled up
-      case f => Seq(f)
-    } :+ StructField("samples_count", LongType, nullable = false))
 }
 
 /** Typed row for the stateful (flatMapGroupsWithState) path.

@@ -26,7 +26,7 @@ object PlanAudit {
     * is followed to its executed plan and a `QueryStageExec` to its stage
     * plan; a `ReusedExchangeExec` is a leaf, credited to the one place its
     * child executes. */
-  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
     case q: QueryStageExec => nodes(q.plan)
     case _ => plan.children.flatMap(nodes)

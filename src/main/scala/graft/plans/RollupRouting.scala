@@ -172,9 +172,10 @@ case class RollupRouting(session: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** p_date conjuncts for the tier scan from the ms time bounds. Partition
-    * values read back type-inferred: DateType for daily `yyyy-MM-dd` dirs,
-    * IntegerType for monthly `yyyyMM` — literals are built to match, so
-    * `PruneFileSourcePartitions` drops whole directories. An unexpected
+    * values read back as [[MetricsSink.read]] declares them: DateType for
+    * daily `yyyy-MM-dd` dirs, IntegerType for monthly `yyyyMM` — literals
+    * are built to match, so `PruneFileSourcePartitions` drops whole
+    * directories. An unexpected
     * partition column type just skips pruning (the bucket_ms bounds remain
     * correct without it). */
   private def partitionBounds(byName: Map[String, Attribute],
@@ -272,12 +273,16 @@ case class RollupRouting(session: SparkSession) extends Rule[LogicalPlan]
     if (!upper.exists(_ <= freshAsOfMs)) return None
 
     // the stored tier's analyzed relation, resolved fresh per rewrite (the
-    // maintenance cascade rewrites these directories between queries). A
-    // tier that is not materialized yet (missing/empty directory) or cannot
-    // be resolved is not an error — the raw-scan plan stands
+    // maintenance cascade rewrites these directories between queries) under
+    // its recorded schema, so planning starts no job. A tier that is not
+    // materialized yet (no record, no directory, or no data file listed) or
+    // cannot be resolved is not an error — the raw-scan plan stands
     val tierPlan = scala.util.Try(
-      session.read.parquet(s"$baseDir/${tier.name}").queryExecution.analyzed)
+      MetricsSink.read(session, baseDir, tier).queryExecution.analyzed)
       .getOrElse(return None)
+    if (tierPlan.collect { case lr: LogicalRelation => lr.relation }
+      .collect { case r: HadoopFsRelation => r.location.inputFiles.length }.sum == 0)
+      return None
     val byName = tierPlan.output.map(a => a.name -> a).toMap
     if (!byName.contains("bucket_ms")) return None
     // every key column the conditions or grouping reference must exist in

@@ -84,7 +84,7 @@ object SinkQueries {
     if (mergeTierBuckets) {
       // the merged mode must actually store bound-summed vectors: a row with
       // a duplicate bound means the concat path leaked through
-      val dup = s.read.parquet(s"$base/metrics_5m")
+      val dup = MetricsSink.read(s, base, MetricsSink.M5)
         .select(size(col("buckets")).as("n"),
           size(array_distinct(col("buckets.le"))).as("nd"))
         .filter(col("n") =!= col("nd")).count()
@@ -97,7 +97,7 @@ object SinkQueries {
       import graft.histo.HistogramFunctions._
       val lo = NowMs - OracleDefs.DayMs
       def merged = merge_buckets_agg(col("buckets"))
-      val routed = s.read.parquet(s"$base/metrics_raw")
+      val routed = MetricsSink.read(s, base, MetricsSink.Raw)
         .filter(col("ts_ms") >= lo && col("ts_ms") < NowMs)
         .groupBy(col("workspace_id"), col("metric"),
           Rollup.bucketMs(col("ts_ms"), 300000L).as("bucket_ms"))
@@ -179,7 +179,7 @@ object SinkQueries {
         // one day up to the freshness watermark: aligned bounds, exactly the
         // span a single cascade at NowMs has materialized in the 1m tier
         val lo = NowMs - OracleDefs.DayMs
-        val routed = s.read.parquet(s"$base/metrics_raw")
+        val routed = MetricsSink.read(s, base, MetricsSink.Raw)
           .filter(col("ts_ms") >= lo && col("ts_ms") < NowMs)
           .groupBy(col("workspace_id"), col("metric"),
             Rollup.bucketMs(col("ts_ms"), 60000L).as("bucket_ms"))

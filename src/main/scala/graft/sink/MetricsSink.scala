@@ -1,8 +1,12 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** S6/O4/F4/ST5 — the storage layout: partitioned, sort-clustered Parquet
   * tables with tiered retention (reference: internal/clickhouse/schema.sql
@@ -23,6 +27,11 @@ import org.apache.spark.sql.functions._
   *   - ClickHouse row `TTL _ttl` → ST5: Spark has no row TTL; retention is a
   *     partition-drop maintenance job (date partitions whose entire range is
   *     expired are deleted), exactly how large lakehouse deployments run it.
+  *   - DDL declaring every table up front (schema.sql:2-73) → a schema
+  *     record per tier, `<baseDir>/<tier>.schema.json` (beside the tier so a
+  *     whole-tier overwrite keeps it), written by the tier's writers before
+  *     any data file commits ([[recordSchema]]) and declared by every read
+  *     ([[read]]): no query pays a schema-inference job.
   *   - `writer.go`'s batch-size/interval dual-trigger flush (S7) is subsumed
   *     by Structured Streaming micro-batches — see
   *     [[graft.streaming.StreamingTemporality.start]].
@@ -56,27 +65,29 @@ object MetricsSink {
     date_format(to_utc_timestamp(timestamp_millis(tsMs), "UTC"), fmt)
   }
 
-  /** S6+O4 — write one tier: derive the partition value, range-partition on
-    * the storage sort key, sort within each task, write Parquet partitioned
-    * by date. `mode` defaults to append (the reference INSERTs); the harness
-    * round-trip uses overwrite for idempotence. */
+  /** S6+O4 — write one tier: record its schema ([[recordSchema]]), then
+    * derive the partition value, range-partition on the storage sort key,
+    * sort within each task, write Parquet partitioned by date. `mode`
+    * defaults to append (the reference INSERTs; an append that does not
+    * match the record fails before writing, as a ClickHouse INSERT with the
+    * wrong columns does); an overwrite replaces the record. */
   def write(df: DataFrame, baseDir: String, tier: Tier, tsMs: Column,
-      sortKey: Seq[Column], mode: String = "append",
-      rangeSlices: Option[Int] = None): String = {
-    val dir = s"$baseDir/${tier.name}"
-    val parted = df.withColumn(PartitionCol, partitionValue(tier, tsMs))
+      sortKey: Seq[Column], mode: String = "append"): Unit = {
+    recordSchema(df.sparkSession, baseDir, tier, df.schema, replace = mode == "overwrite")
+    writeFiles(df, s"$baseDir/${tier.name}", tier, tsMs, sortKey, mode)
+  }
+
+  /** The tier layout under `dir`, no record: also the cascade's staging write. */
+  private[sink] def writeFiles(df: DataFrame, dir: String, tier: Tier,
+      tsMs: Column, sortKey: Seq[Column], mode: String): Unit = {
     val keyed = col(PartitionCol) +: sortKey
-    val ranged = rangeSlices match {
-      case Some(n) => parted.repartitionByRange(n, keyed: _*)
-      case None => parted.repartitionByRange(keyed: _*)
-    }
-    withSkipIndexes(ranged
+    withSkipIndexes(df.withColumn(PartitionCol, partitionValue(tier, tsMs))
+      .repartitionByRange(keyed: _*)
       .sortWithinPartitions(keyed :+ tsMs: _*)
       .write)
       .partitionBy(PartitionCol)
       .mode(mode)
       .parquet(dir)
-    dir
   }
 
   /** The reference's skip indexes (schema.sql:65-67, declared on every
@@ -100,10 +111,68 @@ object MetricsSink {
       .option("parquet.bloom.filter.enabled#service_name", "true")
       .option("parquet.bloom.filter.expected.ndv#service_name", "1000")
 
-  /** S8 read-back: the partition column comes back as a scan column and any
-    * predicate on it prunes directories before a single row is read. */
-  def read(spark: SparkSession, baseDir: String, tier: Tier): DataFrame =
-    spark.read.parquet(s"$baseDir/${tier.name}")
+  /** S8 read-back under the tier's recorded schema: one small file read and
+    * a listing, never a schema-inference job (Parquet inference opens a
+    * footer in a Spark job per call). `p_date` is declared with the type
+    * inference gives it (date daily, int monthly), so predicates on it prune
+    * directories, and a tier with no committed file reads empty with it. A
+    * tier with no record is an error naming its directory. */
+  def read(spark: SparkSession, baseDir: String, tier: Tier): DataFrame = {
+    val dir = s"$baseDir/${tier.name}"
+    val rec = recordPath(baseDir, tier)
+    val data = recorded(rec.getFileSystem(spark.sparkContext.hadoopConfiguration), rec)
+      .getOrElse(throw new IllegalStateException(
+        s"tier directory $dir has no schema record ($rec)"))
+    spark.read.schema(data.add(PartitionCol,
+      if (tier.monthly) IntegerType else DateType)).parquet(dir)
+  }
+
+  /** Where `tier`'s schema record lives: beside the tier directory, not in
+    * it, because a whole-tier overwrite deletes the directory's contents. */
+  private def recordPath(baseDir: String, tier: Tier): Path =
+    new Path(s"$baseDir/${tier.name}.schema.json")
+
+  private def recorded(fs: FileSystem, rec: Path): Option[StructType] =
+    try {
+      val in = fs.open(rec)
+      try Some(DataType.fromJson(new String(in.readAllBytes(),
+        StandardCharsets.UTF_8)).asInstanceOf[StructType])
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  /** Names and types only (every level nullable, no metadata), as Parquet
+    * inference reports them; nullability alone is then no difference. */
+  private def plain(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, plain(f.dataType))))
+    case a: ArrayType => ArrayType(plain(a.elementType))
+    case m: MapType => MapType(plain(m.keyType), plain(m.valueType))
+    case other => other
+  }
+
+  /** Make `schema` (data columns, no `p_date`) the tier's record before any
+    * data file of the write can commit; every tier writer calls this. With
+    * `replace` (a whole-tier overwrite) the record is rewritten, via a
+    * hidden temp file and a rename; otherwise an existing record must match
+    * `schema` in names and types, or the write fails here. */
+  private[sink] def recordSchema(spark: SparkSession, baseDir: String,
+      tier: Tier, schema: StructType, replace: Boolean): Unit = {
+    val data = plain(schema).asInstanceOf[StructType]
+    val rec = recordPath(baseDir, tier)
+    val fs = rec.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (if (replace) None else recorded(fs, rec)) match {
+      case Some(h) => require(h == data,
+        s"write to $baseDir/${tier.name} does not match its recorded schema: " +
+          s"recorded ${h.toDDL}, written ${data.toDDL}")
+      case None =>
+        val tmp = new Path(rec.getParent, s".${rec.getName}.tmp")
+        val out = fs.create(tmp, true)
+        try out.write(data.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+        // HDFS and object stores do not rename over a file; local disk does
+        if (!fs.rename(tmp, rec))
+          require(fs.delete(rec, false) && fs.rename(tmp, rec),
+            s"schema record rename failed: $tmp -> $rec")
+    }
+  }
 
   /** Read-side twin of [[partitionValue]]: map a ms-epoch range onto the
     * partition values it can touch. A bound of 0 is unbounded, the promread
@@ -212,6 +281,8 @@ object MetricsSink {
         .drop(PartitionCol)
         .repartitionByRange(targetFiles, sortKey: _*)
         .sortWithinPartitions(sortKey :+ tsMs: _*)
+      // rewritten under the record it was read with: this only checks it
+      recordSchema(spark, baseDir, tier, compacted.schema, replace = false)
       withSkipIndexes(compacted.write.mode("overwrite"))
         .parquet(tmpDir.toString)
       swapPartitionIn(fs, dir, value, tmpDir)                  // steps 2-4

@@ -121,8 +121,11 @@ object RollupMaintenance {
     // protocol every crash point leaves at least one durable full copy of
     // each partition, and re-running the refresh converges
     // (recoverSwaps above + idempotent recompute).
+    // the live tier's record is checked (or, on its first refresh, written)
+    // before the staging write, so no swapped-in file precedes it
     val merged = keep.fold(recomputed)(_.unionByName(recomputed))
-    MetricsSink.write(merged, s"$targetDir", StagingTier(target),
+    MetricsSink.recordSchema(spark, baseDir, target, merged.schema, replace = false)
+    MetricsSink.writeFiles(merged, staging.toString, target,
       col("bucket_ms"), sortKey, mode = "overwrite")
     val stagedParts = fs.listStatus(staging).toSeq
       .filter(st => st.isDirectory &&
@@ -139,11 +142,6 @@ object RollupMaintenance {
     * to Spark's file listing, deleted as stale at the start of every refresh
     * (single-writer contract, as for compaction). */
   private[sink] val StagingName = ".refresh_staging"
-
-  /** The staging dir shaped as a Tier so [[MetricsSink.write]] lays it out
-    * identically (partitioned + range-clustered) to the live tier. */
-  private def StagingTier(target: MetricsSink.Tier): MetricsSink.Tier =
-    target.copy(name = StagingName)
 
   /** Run the full cascade raw→1m→5m→1h, mirroring the reference's MV chain
     * (tier N+1 reads the tier-N TABLE, never raw — schema.sql:249,340).

@@ -189,8 +189,9 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
     * racing a compaction or cascade swap can plan over a file or partition
     * directory that is gone by the time it is scanned; it is retried once
     * from a fresh listing, and a second such failure surfaces as-is (503,
-    * [[RemoteReadServer.errorStatus]]) — as does a read of a tier directory
-    * whose first write has not committed a file. */
+    * [[RemoteReadServer.errorStatus]]). A tier directory whose first write
+    * has not committed a file yet reads under its recorded schema
+    * ([[MetricsSink.read]]) and answers empty too. */
   def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] = {
     // per-request clock, like the reference handler: a frozen launch-time
     // now would age every routing decision on a long-running server
@@ -343,9 +344,9 @@ object RemoteReadServer {
   /** Storage that changed under the read, or is not written yet, anywhere
     * in the cause chain: FAILED_READ_FILE.FILE_NOT_EXIST from a scan whose
     * file a compaction deleted; PATH_NOT_FOUND from a listing whose
-    * directory a swap moved, or a tier before its first write;
-    * UNABLE_TO_INFER_SCHEMA from a tier directory whose first write has not
-    * committed a file. Matched on error conditions and exception types,
+    * directory a swap moved, or a tier before its first write. No tier read
+    * infers a schema, so a tier directory with no committed file is not an
+    * error at all. Matched on error conditions and exception types,
     * never on message text, which can echo the request's own matchers. */
   private[transport] def isStorageRace(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
@@ -355,7 +356,7 @@ object RemoteReadServer {
     }
 
   private val StorageRaceConditions =
-    Set("FAILED_READ_FILE.FILE_NOT_EXIST", "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+    Set("FAILED_READ_FILE.FILE_NOT_EXIST", "PATH_NOT_FOUND")
 
   /** Run `read`; on a storage race run it once more, from scratch. */
   private[transport] def retryStorageRace[T](read: => T): T =

@@ -240,6 +240,21 @@ class GraftAppSpec extends SparkSpec {
     assert(sinkRows(cfg).length === 3)
   }
 
+  test("tier reads of an app-written store declare the recorded schema: no job, " +
+      "the schema inference gives") {
+    val base = Files.createTempDirectory("graft_app").toString
+    new java.io.File(s"${base}/in").mkdirs()
+    val cfg = cfgFor(base).copy(rollupEveryBatches = 1)
+    land(cfg.sourceDir, 1, exportRows(Seq(
+      ("m9", NowMs - 180000, 100.0), ("m9", NowMs - 120000, 150.0))))
+    runOnce(cfg)
+    MetricsSink.tiers.foreach { t =>
+      val (declared, jobs) = jobsDuring(MetricsSink.read(spark, cfg.storageDir, t).schema)
+      assert(jobs.isEmpty, s"${t.name}: reading its schema started ${jobs.size} job(s)")
+      assert(declared === spark.read.parquet(s"${cfg.storageDir}/${t.name}").schema, t.name)
+    }
+  }
+
   test("maintenance tick publishes the routing watermark: dashboard " +
       "aggregates on the app session auto-route to the stored tier (P8+§4)") {
     // negative first: publish_routing=false (cfgFor default here) must leave

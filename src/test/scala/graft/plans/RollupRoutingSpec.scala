@@ -304,6 +304,39 @@ class RollupRoutingSpec extends SparkSpec {
     }
   }
 
+  test("planning a routed aggregate starts no job") {
+    withRule {
+      val routed = q(60000L, withAvg = true)
+      val (_, jobs) = jobsDuring(routed.queryExecution.executedPlan)
+      assert(jobs.isEmpty, s"planning started ${jobs.size} job(s)")
+      assert(scans(routed, "metrics_1m"), "rewrite did not fire")
+    }
+  }
+
+  test("a recorded tier with no data file declines the rewrite") {
+    // raw written, the 1m tier recorded in its real shape but holding no file
+    val b = Files.createTempDirectory("graft_routing_empty").toString
+    MetricsSink.write(
+      EventsMetrics.withHistogram(EventsMetrics.fromEvents(spark, Sf)),
+      b, MetricsSink.Raw, col("ts_ms"), keys, mode = "overwrite")
+    MetricsSink.write(MetricsSink.read(spark, base, MetricsSink.M1)
+      .drop(MetricsSink.PartitionCol).limit(0),
+      b, MetricsSink.M1, col("bucket_ms"), keys, mode = "overwrite")
+    def q1m() = MetricsSink.read(spark, b, MetricsSink.Raw)
+      .filter(col("ts_ms") >= NowA - Day && col("ts_ms") < NowA)
+      .groupBy(col("workspace_id"), col("metric"),
+        Rollup.bucketMs(col("ts_ms"), 60000L).as("bucket_ms"))
+      .agg(min(col("value")).as("vmin"), count(lit(1)).as("n"))
+    val direct = rows(q1m())
+    assert(direct.nonEmpty)
+    withRule {
+      spark.conf.set("spark.graft.rollup.baseDir", b)
+      val routed = q1m()
+      assert(scans(routed, "metrics_raw"), "routed to a tier with no data")
+      assert(rows(routed) === direct)
+    }
+  }
+
   test("configured key absent from the tier schema declines, never throws") {
     // event_id is a raw column and a configured rollup key here, but the
     // stored tiers do not carry it — a filter referencing it used to throw

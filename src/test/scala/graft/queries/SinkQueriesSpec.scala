@@ -26,4 +26,33 @@ class SinkQueriesSpec extends SparkSpec {
       assert(!tierPlan.contains("metrics_5m"), tierPlan)
     } finally System.setProperty("java.io.tmpdir", saved)
   }
+
+  test("q_read_path_5m_hist scans only the pruned 5m tier and aggregates " +
+      "partially below its exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.plans.PlanAudit
+    val qe = SinkQueries.queries("q_read_path_5m_hist")(spark, Sf).queryExecution
+    assert(qe.toRdd.count() > 0)
+    val nodes = PlanAudit.nodes(qe.executedPlan)
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty)
+    scans.foreach { f =>
+      assert(f.relation.location.rootPaths.map(_.getName) === Seq("metrics_5m"))
+      assert(f.partitionFilters.nonEmpty, s"unpruned scan: ${f.simpleString(200)}")
+    }
+    def partial(p: org.apache.spark.sql.execution.SparkPlan): Boolean = p match {
+      case h: HashAggregateExec => h.aggregateExpressions.exists(_.mode == Partial)
+      case o: ObjectHashAggregateExec => o.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    }
+    val exchanges = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.nonEmpty)
+    exchanges.foreach { e =>
+      assert(PlanAudit.nodes(e.child).exists(partial),
+        s"no partial aggregate below ${e.simpleString(120)}")
+    }
+  }
 }

@@ -47,8 +47,10 @@ class MaintenanceChaosSpec extends SparkSpec {
 
   /** Raw tier written in many range slices so compaction has real work. */
   private def setup(base: String): Unit = {
-    MetricsSink.write(raw(), base, MetricsSink.Raw, col("ts_ms"), keys,
-      mode = "overwrite", rangeSlices = Some(8))
+    withSlices(8) {
+      MetricsSink.write(raw(), base, MetricsSink.Raw, col("ts_ms"), keys,
+        mode = "overwrite")
+    }
     ()
   }
 

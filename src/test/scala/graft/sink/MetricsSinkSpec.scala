@@ -33,6 +33,70 @@ class MetricsSinkSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
+  test("tier reads declare the recorded schema: no job, the schema inference gives") {
+    // an events-derived fixture store (the app-written shape is pinned in
+    // GraftAppSpec): all four tiers, daily and monthly partitions
+    val base = tmpBase()
+    val keys = Seq(col("workspace_id"), col("metric"))
+    MetricsSink.write(EventsMetrics.withHistogram(EventsMetrics.fromEvents(spark, Sf)),
+      base, MetricsSink.Raw, col("ts_ms"), keys, mode = "overwrite")
+    RollupMaintenance.refreshCascade(spark, base,
+      java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli, keys,
+      col("ts_ms"), col("event_id"))
+    MetricsSink.tiers.foreach { t =>
+      val (declared, jobs) = jobsDuring(MetricsSink.read(spark, base, t).schema)
+      assert(jobs.isEmpty, s"${t.name}: reading its schema started ${jobs.size} job(s)")
+      assert(declared === spark.read.parquet(s"$base/${t.name}").schema, t.name)
+    }
+  }
+
+  test("a tier with a record and no data file reads empty with p_date; " +
+      "a tier directory with no record is an error naming it") {
+    val base = tmpBase()
+    MetricsSink.write(m1().limit(0), base, MetricsSink.M1, col("bucket_ms"),
+      Seq(col("workspace_id")), mode = "overwrite")
+    val empty = MetricsSink.read(spark, base, MetricsSink.M1)
+      .filter(MetricsSink.partitionFilter(MetricsSink.M1, 1L, 2L))
+    assert(empty.schema(MetricsSink.PartitionCol).dataType ===
+      org.apache.spark.sql.types.DateType)
+    assert(empty.count() === 0)
+
+    spark.range(3).toDF("bucket_ms").write.parquet(s"$base/metrics_5m")
+    val e = intercept[IllegalStateException](
+      MetricsSink.read(spark, base, MetricsSink.M5))
+    assert(e.getMessage.contains(s"$base/metrics_5m"), e.getMessage)
+  }
+
+  test("an append whose schema differs from the record fails and leaves the tier unchanged") {
+    import scala.jdk.CollectionConverters._
+    val base = tmpBase()
+    val df = m1()
+    val key = Seq(col("workspace_id"), col("metric"))
+    MetricsSink.write(df, base, MetricsSink.M1, col("bucket_ms"), key, mode = "overwrite")
+    val root = java.nio.file.Paths.get(base)
+    def files(): Seq[(String, Long)] = Files.walk(root).iterator.asScala
+      .filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.size(p)).toSeq.sorted
+    val before = files()
+    val rows = MetricsSink.read(spark, base, MetricsSink.M1).count()
+    Seq(df.withColumn("extra", lit(1)), df.drop("value_last"),
+      df.withColumn("samples_count", col("samples_count").cast("int"))).foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        MetricsSink.write(bad, base, MetricsSink.M1, col("bucket_ms"), key))
+      assert(e.getMessage.contains("metrics_1m"), e.getMessage)
+      assert(files() === before)
+    }
+    assert(MetricsSink.read(spark, base, MetricsSink.M1).count() === rows)
+    // nullability alone is no difference: a non-null column appends
+    MetricsSink.write(df.na.fill(0.0, Seq("value_last")), base, MetricsSink.M1,
+      col("bucket_ms"), key)
+    assert(MetricsSink.read(spark, base, MetricsSink.M1).count() === 2 * rows)
+    // an overwrite replaces the record along with the data
+    MetricsSink.write(df.withColumn("extra", lit(1)), base, MetricsSink.M1,
+      col("bucket_ms"), key, mode = "overwrite")
+    assert(MetricsSink.read(spark, base, MetricsSink.M1).columns.contains("extra"))
+  }
+
   test("partition naming: daily yyyy-MM-dd for 1m, monthly yyyyMM for 1h (F4)") {
     val base = tmpBase()
     val df = m1()
@@ -93,17 +157,21 @@ class MetricsSinkSpec extends SparkSpec {
       ("ws-1", f"metric_name_with_padding_$i%032d", 1706140800000L + i))
       .toDF("workspace_id", "metric", "bucket_ms")
     val hiBase = tmpBase()
-    MetricsSink.write(hi, hiBase, MetricsSink.M1, col("bucket_ms"),
-      Seq(col("workspace_id"), col("metric")), mode = "overwrite",
-      rangeSlices = Some(1))
+    // one range slice, so the whole day's names land in one file
+    withSlices(1) {
+      MetricsSink.write(hi, hiBase, MetricsSink.M1, col("bucket_ms"),
+        Seq(col("workspace_id"), col("metric")), mode = "overwrite")
+    }
     val hiFiles = parquetFiles(hiBase)
     assert(hiFiles.nonEmpty)
     hiFiles.foreach(f => assert(bloomOn(f, "metric"), s"no metric bloom in $f"))
     hiFiles.foreach(f => assert(!bloomOn(f, "bucket_ms"), s"stray bloom in $f"))
 
     // compaction is a tier writer too: the rewritten part keeps the index
-    MetricsSink.write(hi, hiBase, MetricsSink.M1, col("bucket_ms"),
-      Seq(col("workspace_id"), col("metric")), rangeSlices = Some(1))
+    withSlices(1) {
+      MetricsSink.write(hi, hiBase, MetricsSink.M1, col("bucket_ms"),
+        Seq(col("workspace_id"), col("metric")))
+    }
     MetricsSink.compactPartitions(spark, hiBase, MetricsSink.M1,
       Seq(col("workspace_id"), col("metric")), col("bucket_ms"), maxFiles = 1)
     val after = parquetFiles(hiBase)
@@ -132,7 +200,7 @@ class MetricsSinkSpec extends SparkSpec {
     val base = tmpBase()
     MetricsSink.write(m1(), base, MetricsSink.M1, col("bucket_ms"),
       Seq(col("workspace_id")), mode = "overwrite")
-    // partition values read back type-inferred (DateType) — cast for compare
+    // partition values read back as dates (DateType) — cast for compare
     val before = MetricsSink.read(spark, base, MetricsSink.M1)
       .select(col(MetricsSink.PartitionCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
@@ -160,9 +228,10 @@ class MetricsSinkSpec extends SparkSpec {
     val base = tmpBase()
     // Enough range slices that days subdivide into workspace sub-ranges —
     // the production regime, where slices ≫ date partitions.
-    MetricsSink.write(m1(), base, MetricsSink.M1, col("bucket_ms"),
-      Seq(col("workspace_id"), col("metric")), mode = "overwrite",
-      rangeSlices = Some(128))
+    withSlices(128) {
+      MetricsSink.write(m1(), base, MetricsSink.M1, col("bucket_ms"),
+        Seq(col("workspace_id"), col("metric")), mode = "overwrite")
+    }
     val back = MetricsSink.read(spark, base, MetricsSink.M1)
     // A single sorted file must not span all 4 workspaces — that's the
     // min/max-stat locality claim behind the ORDER BY key (O4).

@@ -212,31 +212,15 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
   }
 
   test("an Export lands and acks without starting a Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    withReceiver() { (sourceDir, port) =>
+      val (_, jobs) = jobsDuring {
+        val resp = GrpcTestClient.call(port, ExportPath,
+          grpcFrame(OtlpProto.encodeExportRequest(fixture)))
+        assert(resp.grpcStatus === 0)
+        assertOnlyLanded(sourceDir, 1)
+      }
+      assert(jobs.isEmpty, s"jobs started during the Export: $jobs")
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try withReceiver() { (sourceDir, port) =>
-      val resp = GrpcTestClient.call(port, ExportPath,
-        grpcFrame(OtlpProto.encodeExportRequest(fixture)))
-      assert(resp.grpcStatus === 0)
-      assertOnlyLanded(sourceDir, 1)
-      // the listener bus delivers in order: every job started before this
-      // marked one is seen before it
-      sc.setJobDescription("landing-marker")
-      try spark.range(1).collect() finally sc.setJobDescription(null)
-      def next() = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      val before = Seq.newBuilder[String]
-      var d = next()
-      while (d != null && d != "landing-marker") { before += d; d = next() }
-      assert(d === "landing-marker", "the listener never saw the marker job")
-      assert(before.result().isEmpty, s"jobs started during the Export: ${before.result()}")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("the landed file equals the DataFrame write of the same rows") {

@@ -484,11 +484,13 @@ class RemoteReadServerSpec extends SparkSpec {
       spark.read.parquet(Files.createTempDirectory("graft_race").toString + "/gone"))
     assert(isStorageRace(listing), listing)
     assert(errorStatus(listing) === 503)
-    // a tier directory whose first write has not committed a file yet
+    // schema inference failing is no storage race: no tier read infers a
+    // schema, so a tier directory with no committed file answers empty
+    // (the test below)
     val unwritten = intercept[Exception](
       spark.read.parquet(Files.createTempDirectory("graft_race").toString))
-    assert(isStorageRace(unwritten), unwritten)
-    assert(errorStatus(unwritten) === 503)
+    assert(!isStorageRace(unwritten), unwritten)
+    assert(errorStatus(unwritten) === 400)
     // the other arms keep their statuses
     assert(errorStatus(new IllegalArgumentException("unknown matcher type 9")) === 400)
     // a bad regex matcher echoes the request in its message: still the
@@ -513,9 +515,34 @@ class RemoteReadServerSpec extends SparkSpec {
     } finally empty.stop()
   }
 
+  test("a recorded tier whose first write has not committed a file answers empty") {
+    // the raw tier during a fresh app's first write: its record written, its
+    // directory holding nothing but the in-flight _temporary
+    val b = Files.createTempDirectory("graft_transport_first").toString
+    MetricsSink.write(
+      EventsMetrics.withHistogram(EventsMetrics.fromEvents(spark, Sf)).limit(0),
+      b, MetricsSink.Raw, col("ts_ms"), keys, mode = "overwrite")
+    val tierDir = new java.io.File(b, MetricsSink.Raw.name)
+    tierDir.listFiles.filter(_.isFile).foreach(_.delete())
+    new java.io.File(tierDir, "_temporary/0").mkdirs()
+    assert(tierDir.list.toSeq === Seq("_temporary"))
+    val q = PromProto.Query(NowA - 60000L, NowA,
+      Seq(PromProto.LabelMatcher(0, "__name__", "evt_a")))
+    assert(Promread.selectTable(q.startMs, q.endMs, NowA) === MetricsSink.Raw.name)
+    val src = Files.createTempDirectory("graft_transport_src").toString
+    val srv = new RemoteReadServer(spark, b, src, "ws-1", NowA)
+    val port = srv.start()
+    try {
+      val (code, body) = post(port, "/api/v1/read",
+        Snappy.compress(PromProto.encodeReadRequest(Seq(q))))
+      assert(code === 200, new String(body, "UTF-8"))
+      assert(PromProto.decodeReadResponse(Snappy.uncompress(body)) === Seq(Nil))
+    } finally srv.stop()
+  }
+
   test("a windowed read never opens a date partition outside its window") {
-    // raw tier: an old valid partition (it sorts first, so schema inference
-    // reads it), a corrupt one, and the window's own partition
+    // raw tier: an old valid partition, a corrupt one, and the window's own
+    // partition
     val b = Files.createTempDirectory("graft_transport_prune").toString
     val day = 24 * 3600 * 1000L
     val rows = EventsMetrics.withAttributes(EventsMetrics.fromEvents(spark, Sf))
