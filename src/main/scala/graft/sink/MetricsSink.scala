@@ -1,9 +1,9 @@
 package graft.sink
 
-import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -72,14 +72,17 @@ object MetricsSink {
     * match the record fails before writing, as a ClickHouse INSERT with the
     * wrong columns does); an overwrite replaces the record. */
   def write(df: DataFrame, baseDir: String, tier: Tier, tsMs: Column,
-      sortKey: Seq[Column], mode: String = "append"): Unit = {
-    recordSchema(df.sparkSession, baseDir, tier, df.schema, replace = mode == "overwrite")
-    writeFiles(df, s"$baseDir/${tier.name}", tier, tsMs, sortKey, mode)
-  }
+      sortKey: Seq[Column], mode: String = "append"): Unit =
+    writeFiles(df, baseDir, tier, tsMs, sortKey, mode, s"$baseDir/${tier.name}")
 
-  /** The tier layout under `dir`, no record: also the cascade's staging write. */
-  private[sink] def writeFiles(df: DataFrame, dir: String, tier: Tier,
-      tsMs: Column, sortKey: Seq[Column], mode: String): Unit = {
+  /** [[write]] into `dir`: the live tier directory, or a staging directory
+    * whose partitions are later swapped into it (the cascade's refresh).
+    * The tier's record is checked, or written if absent, before any file;
+    * only a whole-tier overwrite of the live directory replaces it. */
+  private[sink] def writeFiles(df: DataFrame, baseDir: String, tier: Tier,
+      tsMs: Column, sortKey: Seq[Column], mode: String, dir: String): Unit = {
+    recordSchema(baseDir, tier, df.schema,
+      replace = mode == "overwrite" && dir == s"$baseDir/${tier.name}")
     val keyed = col(PartitionCol) +: sortKey
     withSkipIndexes(df.withColumn(PartitionCol, partitionValue(tier, tsMs))
       .repartitionByRange(keyed: _*)
@@ -120,25 +123,25 @@ object MetricsSink {
   def read(spark: SparkSession, baseDir: String, tier: Tier): DataFrame = {
     val dir = s"$baseDir/${tier.name}"
     val rec = recordPath(baseDir, tier)
-    val data = recorded(rec.getFileSystem(spark.sparkContext.hadoopConfiguration), rec)
-      .getOrElse(throw new IllegalStateException(
-        s"tier directory $dir has no schema record ($rec)"))
+    val data = recorded(rec).getOrElse(throw new IllegalStateException(
+      s"tier directory $dir has no schema record ($rec)"))
     spark.read.schema(data.add(PartitionCol,
       if (tier.monthly) IntegerType else DateType)).parquet(dir)
   }
 
   /** Where `tier`'s schema record lives: beside the tier directory, not in
-    * it, because a whole-tier overwrite deletes the directory's contents. */
-  private def recordPath(baseDir: String, tier: Tier): Path =
-    new Path(s"$baseDir/${tier.name}.schema.json")
+    * it, because a whole-tier overwrite deletes the directory's contents.
+    * The store is a local directory, whatever scheme names it, and the
+    * record is a local file, replaced as the landing reveals a file: a
+    * same-directory ATOMIC_MOVE (Hadoop's `file:` rename refuses to replace
+    * an existing file, so it cannot swap a record in one step). */
+  private def recordPath(baseDir: String, tier: Tier): java.nio.file.Path =
+    Paths.get(new Path(s"$baseDir/${tier.name}.schema.json").toUri.getPath)
 
-  private def recorded(fs: FileSystem, rec: Path): Option[StructType] =
-    try {
-      val in = fs.open(rec)
-      try Some(DataType.fromJson(new String(in.readAllBytes(),
-        StandardCharsets.UTF_8)).asInstanceOf[StructType])
-      finally in.close()
-    } catch { case _: FileNotFoundException => None }
+  private def recorded(rec: java.nio.file.Path): Option[StructType] =
+    try Some(DataType.fromJson(new String(Files.readAllBytes(rec),
+      StandardCharsets.UTF_8)).asInstanceOf[StructType])
+    catch { case _: NoSuchFileException => None }
 
   /** Names and types only (every level nullable, no metadata), as Parquet
     * inference reports them; nullability alone is then no difference. */
@@ -150,27 +153,23 @@ object MetricsSink {
   }
 
   /** Make `schema` (data columns, no `p_date`) the tier's record before any
-    * data file of the write can commit; every tier writer calls this. With
+    * data file of the write can commit ([[writeFiles]] calls it). With
     * `replace` (a whole-tier overwrite) the record is rewritten, via a
-    * hidden temp file and a rename; otherwise an existing record must match
+    * hidden temp file and an atomic move; otherwise an existing record must match
     * `schema` in names and types, or the write fails here. */
-  private[sink] def recordSchema(spark: SparkSession, baseDir: String,
-      tier: Tier, schema: StructType, replace: Boolean): Unit = {
+  private def recordSchema(baseDir: String, tier: Tier, schema: StructType,
+      replace: Boolean): Unit = {
     val data = plain(schema).asInstanceOf[StructType]
     val rec = recordPath(baseDir, tier)
-    val fs = rec.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (replace) None else recorded(fs, rec)) match {
+    (if (replace) None else recorded(rec)) match {
       case Some(h) => require(h == data,
         s"write to $baseDir/${tier.name} does not match its recorded schema: " +
           s"recorded ${h.toDDL}, written ${data.toDDL}")
       case None =>
-        val tmp = new Path(rec.getParent, s".${rec.getName}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(data.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        // HDFS and object stores do not rename over a file; local disk does
-        if (!fs.rename(tmp, rec))
-          require(fs.delete(rec, false) && fs.rename(tmp, rec),
-            s"schema record rename failed: $tmp -> $rec")
+        val tmp = rec.resolveSibling(s".${rec.getFileName}.tmp")
+        Files.createDirectories(rec.getParent)
+        Files.write(tmp, data.json.getBytes(StandardCharsets.UTF_8))
+        Files.move(tmp, rec, StandardCopyOption.ATOMIC_MOVE)
     }
   }
 
@@ -281,8 +280,6 @@ object MetricsSink {
         .drop(PartitionCol)
         .repartitionByRange(targetFiles, sortKey: _*)
         .sortWithinPartitions(sortKey :+ tsMs: _*)
-      // rewritten under the record it was read with: this only checks it
-      recordSchema(spark, baseDir, tier, compacted.schema, replace = false)
       withSkipIndexes(compacted.write.mode("overwrite"))
         .parquet(tmpDir.toString)
       swapPartitionIn(fs, dir, value, tmpDir)                  // steps 2-4

@@ -121,12 +121,10 @@ object RollupMaintenance {
     // protocol every crash point leaves at least one durable full copy of
     // each partition, and re-running the refresh converges
     // (recoverSwaps above + idempotent recompute).
-    // the live tier's record is checked (or, on its first refresh, written)
-    // before the staging write, so no swapped-in file precedes it
-    val merged = keep.fold(recomputed)(_.unionByName(recomputed))
-    MetricsSink.recordSchema(spark, baseDir, target, merged.schema, replace = false)
-    MetricsSink.writeFiles(merged, staging.toString, target,
-      col("bucket_ms"), sortKey, mode = "overwrite")
+    // writeFiles checks (or, on the first refresh, writes) the live tier's
+    // record before the staging write, so no swapped-in file precedes it
+    MetricsSink.writeFiles(keep.fold(recomputed)(_.unionByName(recomputed)),
+      baseDir, target, col("bucket_ms"), sortKey, "overwrite", staging.toString)
     val stagedParts = fs.listStatus(staging).toSeq
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(s"${MetricsSink.PartitionCol}="))

@@ -212,15 +212,14 @@ class GrpcOtlpReceiverSpec extends SparkSpec {
   }
 
   test("an Export lands and acks without starting a Spark job") {
-    withReceiver() { (sourceDir, port) =>
-      val (_, jobs) = jobsDuring {
-        val resp = GrpcTestClient.call(port, ExportPath,
-          grpcFrame(OtlpProto.encodeExportRequest(fixture)))
-        assert(resp.grpcStatus === 0)
-        assertOnlyLanded(sourceDir, 1)
-      }
-      assert(jobs.isEmpty, s"jobs started during the Export: $jobs")
-    }
+    // the receiver's construction, start and stop are inside the count too
+    val (_, jobs) = jobsDuring(withReceiver() { (sourceDir, port) =>
+      val resp = GrpcTestClient.call(port, ExportPath,
+        grpcFrame(OtlpProto.encodeExportRequest(fixture)))
+      assert(resp.grpcStatus === 0)
+      assertOnlyLanded(sourceDir, 1)
+    })
+    assert(jobs.isEmpty, s"jobs started during the receiver's life: $jobs")
   }
 
   test("the landed file equals the DataFrame write of the same rows") {
